@@ -260,15 +260,18 @@ object Pq {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebooks")
   }
 
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): PqModel = {
-    val rows = spark.read.parquet(s"$path/pq_codebooks")
-      .select("subspace", "code", "centroid")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = rows.map(_._1).max + 1
-    val ksub = rows.map(_._2).max + 1
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): PqModel =
+    fromRows(spark.read.parquet(s"$path/pq_codebooks")
+      .select("subspace", "code", "centroid").collect())
+
+  /** The model held by collected `pq_codebooks` rows — (subspace,
+    * code, centroid) in their first three columns. */
+  private def fromRows(rows: Array[org.apache.spark.sql.Row]): PqModel = {
+    val m = rows.map(_.getInt(0)).max + 1
+    val ksub = rows.map(_.getInt(1)).max + 1
     val cb = Array.ofDim[Array[Double]](m, ksub)
-    rows.foreach { case (j, c, v) => cb(j)(c) = v }
-    PqModel(m, ksub, cb(0)(0).length, cb.map(_.toArray))
+    rows.foreach(r => cb(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+    PqModel(m, ksub, cb(0)(0).length, cb)
   }
 
   /** The encoding space a persisted model's codes live in: "residual"
@@ -316,15 +319,7 @@ object Pq {
           val rows = df.select("subspace", "code", "centroid", "encoding")
             .collect()
           if (rows.isEmpty || rows.head.getString(3) != "residual") None
-          else {
-            val trip = rows.map(r =>
-              (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-            val m0 = trip.map(_._1).max + 1
-            val ksub0 = trip.map(_._2).max + 1
-            val cb = Array.ofDim[Array[Double]](m0, ksub0)
-            trip.foreach { case (j, c, v) => cb(j)(c) = v }
-            Some(PqModel(m0, ksub0, cb(0)(0).length, cb.map(_.toArray)))
-          }
+          else Some(fromRows(rows))
         }
       }
     val haveModel = loadedResidual.isDefined

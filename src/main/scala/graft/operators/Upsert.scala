@@ -10,10 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the anti join shuffles on the key (or broadcasts when
   * updates are small — the common case for corrections), the union is
-  * free; rewriting only affected partitions is the partition-pruned
-  * variant below, and `mergeInto` finishes the job with a
-  * dynamic-partition-overwrite write that leaves every untouched
-  * partition's files physically untouched.
+  * free. The transactional, file-granular form over a stored table is
+  * [[graft.storage.TxLog.mergeInto]].
   */
 object Upsert {
 
@@ -61,79 +59,6 @@ object Upsert {
                  preValidated: Boolean = false): DataFrame = {
     if (!preValidated) requireUnique(updates, keys, "mergeByKey: duplicate update rows")
     updates.unionByName(existing.join(updates.select(keys.map(col): _*), keys, "left_anti"))
-  }
-
-  /** Partition-pruned merge: returns (partitionsToRewrite, merged rows
-    * for exactly those partitions) — at 100 TB you merge into the
-    * handful of chr/date partitions that changed, not the table.
-    *
-    * The rewrite set covers BOTH sides of a key move: partitions named
-    * in `updates` (receiving rows) AND partitions currently holding a
-    * key whose update lands in a different partition — without the
-    * latter, a moved key's stale row would survive in its old
-    * partition and the table would carry a duplicate primary key. The
-    * moved-key probe is one join of the two key columns, broadcast-able
-    * whenever the updates side is. */
-  def mergePartitioned(existing: DataFrame, updates: DataFrame, keys: Seq[String],
-                       partitionCol: String,
-                       preValidated: Boolean = false): (Seq[Any], DataFrame) = {
-    val target = updates.select(col(partitionCol))
-    val moved = existing.select((keys :+ partitionCol).map(col): _*)
-      .join(
-        updates.select((keys.map(col) :+ col(partitionCol).as("__part_new")): _*),
-        keys)
-      .filter(col(partitionCol) =!= col("__part_new"))
-      .select(col(partitionCol))
-    val parts = target.union(moved).distinct().collect().map(_.get(0)).toSeq
-    val touched = existing.filter(col(partitionCol).isin(parts: _*))
-    // anti join on the keys ALONE (not key+partition): this is what
-    // drops a moved key's old row from its old partition
-    (parts, mergeByKey(touched, updates, keys, preValidated))
-  }
-
-  /** End-to-end merge into a parquet table on disk, the plain-parquet
-    * equivalent of a Delta MERGE: compute the partition-pruned merge,
-    * stage it, then dynamic-partition-overwrite the table — only the
-    * rewritten partitions' directories change; every other partition's
-    * files stay byte-identical (asserted in WarehouseQueriesSpec).
-    *
-    * The staging hop exists because Spark (correctly) refuses to
-    * overwrite a path it is reading from; the extra write is bounded by
-    * the touched partitions, not the table. A transactional log (Delta)
-    * would replace the stage+rewrite with a commit — the partition
-    * arithmetic above is unchanged. */
-  def mergeInto(tablePath: String, updates: DataFrame, keys: Seq[String],
-                partitionCol: String, preValidated: Boolean = false): Seq[Any] = {
-    import org.apache.hadoop.fs.Path
-    val spark = updates.sparkSession
-    val existing = spark.read.parquet(tablePath)
-    val (parts, merged) = mergePartitioned(existing, updates, keys, partitionCol, preValidated)
-    val staging = s"$tablePath.__staging"
-    merged.write.mode("overwrite").partitionBy(partitionCol).parquet(staging)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staging), spark.sparkContext.hadoopConfiguration)
-    // partitions the merge actually produced rows for — read off the
-    // staged layout, NOT by re-evaluating `merged` (it reads tablePath)
-    val stagedDirs = fs.listStatus(new Path(staging))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith(s"$partitionCol=")).toSet
-    spark.read.parquet(staging)
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy(partitionCol)
-      .parquet(tablePath)
-    // dynamic overwrite only replaces partitions PRESENT in the written
-    // data — a partition emptied by a moved key is absent from the
-    // stage, so its stale directory must be dropped explicitly (what a
-    // Delta MERGE's commit would record as removed files)
-    parts.foreach { v =>
-      val dirName = s"$partitionCol=$v"
-      if (!stagedDirs.contains(dirName))
-        fs.delete(new Path(s"$tablePath/$dirName"), true)
-    }
-    fs.delete(new Path(staging), true)
-    parts
   }
 
   /** SCD Type 2: apply a change batch to a versioned dimension, keeping

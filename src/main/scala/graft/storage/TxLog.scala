@@ -167,17 +167,6 @@ object TxLog {
 
   private val mapper = new ObjectMapper()
 
-  /** Conf-gated phase tracer (`graft.txlog.trace=true`): wall time of
-    * named verb sub-phases to stderr — attribution tooling for the
-    * commit path's fixed costs; zero overhead when off. */
-  private def trace[T](spark: SparkSession, tag: String)(f: => T): T =
-    if (!spark.conf.getOption("graft.txlog.trace").exists(_.toBoolean)) f
-    else {
-      val t0 = System.nanoTime()
-      try f finally System.err.println(
-        f"[txlog-trace] $tag%-36s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-    }
-
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
@@ -237,6 +226,11 @@ object TxLog {
         fs.listStatus(dir).toSeq.flatMap(s => versionOf(s.getPath)).maxOption
     }
   }
+
+  /** The head snapshot of the table at `path`; refuses a missing table. */
+  private def head(spark: SparkSession, path: String): Manifest =
+    manifest(spark, path, currentVersion(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"TxLog: no table at $path")))
 
   // ------------------------------------------------------------------
   // Snapshot resolution: cache + checkpoints + delta replay
@@ -1544,10 +1538,8 @@ object TxLog {
         org.apache.spark.sql.functions.col(
           "`" + c.replace("`", "``") + "`")): _*)
     val w = toWrite.write.mode("overwrite")
-    trace(spark, "  stageIn: parquet write") {
-      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
-        .parquet(staging.toString)
-    }
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+      .parquet(staging.toString)
     // a bucket transform's derivation IS Spark's own bucket id
     // (pmod(murmur3, n) — HashPartitioning.partitionIdExpression), so
     // staged names embed the id in Spark's `_%05d` bucket-file shape:
@@ -1582,10 +1574,8 @@ object TxLog {
           moved += relDst
         }
       }
-    trace(spark, "  stageIn: rename walk") {
-      walk(staging, "")
-      fs.delete(staging, true)
-    }
+    walk(staging, "")
+    fs.delete(staging, true)
     moved.toSeq
   }
 
@@ -1756,14 +1746,10 @@ object TxLog {
     require(currentVersion(df.sparkSession, path).isEmpty,
       s"TxLog: table already exists at $path")
     validateStatsCols(df.schema, statsCols, "TxLog.create")
-    val files = trace(df.sparkSession, "create: stageIn") {
-      stageIn(df, path, layout, transforms)
-    }
+    val files = stageIn(df, path, layout, transforms)
     val (stats, rowCounts, nullCounts) =
-      trace(df.sparkSession, "create: collectStats") {
-        collectStats(df.sparkSession, path, df.schema, statsCols, files,
-          recoverPartitions = transforms.isEmpty)
-      }
+      collectStats(df.sparkSession, path, df.schema, statsCols, files,
+        recoverPartitions = transforms.isEmpty)
     // a dead table recreated at this path must not serve the old
     // incarnation's cached snapshots
     cacheInvalidate(df.sparkSession, path)
@@ -1774,9 +1760,7 @@ object TxLog {
       minWriter =
         if (layout.size >= 2 || transforms.nonEmpty) 2 else 1,
       partitionSpec = transforms.map(_.spec))
-    trace(df.sparkSession, "create: writeManifest") {
-      writeManifest(df.sparkSession, path, m, operation = "CREATE")
-    }
+    writeManifest(df.sparkSession, path, m, operation = "CREATE")
     cachePut(df.sparkSession, path, m)
     1L
   }
@@ -2158,7 +2142,7 @@ object TxLog {
     val v = version.orElse(currentVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), m.files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    scanOf(spark, path, m, m.files)
   }
 
   /** [[read]] plus the row-POSITION metadata columns: `_file` (the
@@ -2175,9 +2159,7 @@ object TxLog {
     val v = version.orElse(currentVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), m.files,
-        m.colMap, m.dv, keepDvKey = true,
-        recoverPartitions = m.partitionSpec.isEmpty)
+    scanOf(spark, path, m, m.files, keepDvKey = true)
       .withColumn("_pos", col("_dv_idx").cast("long"))
       .withColumnRenamed("_dv_key", "_file")
       .drop("_dv_idx")
@@ -2273,6 +2255,19 @@ object TxLog {
           org.apache.spark.sql.functions.col("_dv_idx"))
         else Nil)).toIndexedSeq: _*)
     }
+
+  /** The live rows of `files` in snapshot `m` — [[readFiles]] with the
+    * manifest's schema, renames, deletion vectors and layout. */
+  private def scanOf(spark: SparkSession, path: String, m: Manifest,
+                     files: Iterable[String],
+                     keepDvKey: Boolean = false): DataFrame =
+    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files.toSeq,
+      m.colMap, m.dv, keepDvKey, recoverPartitions = m.partitionSpec.isEmpty)
+
+  /** Stage `df` (LOGICAL columns) as new data files in snapshot `m`'s
+    * layout — physical names, partition columns and transforms. */
+  private def stageRows(path: String, m: Manifest, df: DataFrame): Seq[String] =
+    stageIn(toPhysical(df, m.colMap), path, physPartCols(m), transformsOf(m))
 
   /** A DV file reference resolves like a data entry: table-relative
     * under `_dv/`, or absolute (a shallow clone's pointer into the
@@ -2503,7 +2498,7 @@ object TxLog {
     val files = prunedFiles(spark, path, colName, lower, upper, Some(v))
     import org.apache.spark.sql.functions.lit
     // a variant-path column filters through its declared extraction
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    scanOf(spark, path, m, files)
       .filter(statsColExpr(colName).between(lit(lower), lit(upper)))
   }
 
@@ -2541,9 +2536,7 @@ object TxLog {
         s"v$sinceVersion and v$to — history is not append-only over " +
         "this range; consume TxLog.changes instead")
     val fromSet = mFrom.files.toSet
-    readFiles(spark, path, StructType.fromDDL(mTo.schemaDdl),
-      mTo.files.filterNot(fromSet), mTo.colMap, mTo.dv,
-      recoverPartitions = mTo.partitionSpec.isEmpty)
+    scanOf(spark, path, mTo, mTo.files.filterNot(fromSet))
   }
 
   /** Files ADDED by version `v` over its predecessor — the
@@ -2571,7 +2564,7 @@ object TxLog {
   private[graft] def readFileList(spark: SparkSession, path: String,
                                   version: Long, files: Seq[String]): DataFrame = {
     val m = manifest(spark, path, version)
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    scanOf(spark, path, m, files)
   }
 
   /** Additive-only schema widening: every declared column keeps its
@@ -3114,9 +3107,7 @@ object TxLog {
                                 minWriterFloor: Int = 0): Long = {
     var retries = 0
     while (true) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val attempt = manifest(spark, path, v)
+      val attempt = head(spark, path)
       requireWritable(attempt, path)
       revalidate(attempt)
       val (nextChecks, nextUniques) = update(attempt)
@@ -3293,9 +3284,7 @@ object TxLog {
   /** The column policies in force at the head: (column, kind, expr)
     * with kind ∈ {default, generated}. */
   def columnPolicies(spark: SparkSession, path: String): Seq[(String, String, String)] = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
     columnDefaults(m).toSeq.sorted.map { case (c, e) => (c, "default", e) } ++
       generatedColumns(m).toSeq.sorted.map { case (c, e) => (c, "generated", e) } ++
       identityColumns(m).toSeq.sortBy(_._1).map { case (c, (step, next)) =>
@@ -3554,9 +3543,7 @@ object TxLog {
                    cols: Seq[String], maxRetries: Int = 10): Long = {
     var retries = 0
     while (true) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val attempt = manifest(spark, path, v)
+      val attempt = head(spark, path)
       requireWritable(attempt, path)
       val declared = StructType.fromDDL(attempt.schemaDdl).fieldNames.toSet
       cols.foreach(c => require(declared.contains(c),
@@ -3615,9 +3602,7 @@ object TxLog {
     require(oldName != newName, "TxLog.renameColumn: names are identical")
     var retries = 0
     while (true) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val attempt = manifest(spark, path, v)
+      val attempt = head(spark, path)
       requireWritable(attempt, path)
       val declared = StructType.fromDDL(attempt.schemaDdl)
       require(declared.fieldNames.contains(oldName),
@@ -3730,9 +3715,7 @@ object TxLog {
       "TxLog.addColumn: a column is GENERATED or has a DEFAULT, not both")
     var retries = 0
     while (true) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val attempt = manifest(spark, path, v)
+      val attempt = head(spark, path)
       requireWritable(attempt, path)
       val declared = StructType.fromDDL(attempt.schemaDdl)
       require(!declared.fieldNames.contains(name),
@@ -3820,9 +3803,7 @@ object TxLog {
                  maxRetries: Int = 10): Long = {
     var retries = 0
     while (true) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val attempt = manifest(spark, path, v)
+      val attempt = head(spark, path)
       requireWritable(attempt, path)
       val declared = StructType.fromDDL(attempt.schemaDdl)
       require(declared.fieldNames.contains(name),
@@ -3961,9 +3942,7 @@ object TxLog {
     val newDt = org.apache.spark.sql.types.DataType.fromDDL(ddlType)
     var retries = 0
     while (true) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val attempt = manifest(spark, path, v)
+      val attempt = head(spark, path)
       requireWritable(attempt, path)
       val declared = StructType.fromDDL(attempt.schemaDdl)
       require(declared.fieldNames.contains(name),
@@ -4056,9 +4035,7 @@ object TxLog {
         "CLONE or rewrite into a fresh table instead")
     var retries = 0
     while (true) {
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val attempt = manifest(spark, path, v)
+      val attempt = head(spark, path)
       requireWritable(attempt, path)
       require(attempt.partitionSpec.nonEmpty || attempt.partitionCols.isEmpty,
         "TxLog.alterPartitionSpec: table is EXPLICITLY partitioned — its " +
@@ -4151,9 +4128,7 @@ object TxLog {
   private def appendOnce(df0: DataFrame, path: String,
                          evolveSchema: Boolean): Long = {
     val spark = df0.sparkSession
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
     requireWritable(m, path)
     val declared = StructType.fromDDL(m.schemaDdl)
     // omitted DEFAULT/GENERATED columns fill BEFORE the schema gate
@@ -4184,7 +4159,7 @@ object TxLog {
     enforceConstraints(df, m.constraints, "append")
     enforceUniques(df, spark, path, declared, m.files, m, "append")
     val ddl = if (evolveSchema) widen(declared, df.schema).toDDL else m.schemaDdl
-    val files = stageIn(toPhysical(df, m.colMap), path, physPartCols(m), transformsOf(m))
+    val files = stageRows(path, m, df)
     // a blind append depends on nothing it read — it rebases over any
     // interleaved commit (appends never conflict with appends). Under
     // a UNIQUE set the rebase RE-PROBES the incoming keys against
@@ -4229,9 +4204,8 @@ object TxLog {
   def appendBatch(df0: DataFrame, path: String, batchId: Long): Long =
     retryIdentityRace("appendBatch") {
       val spark = df0.sparkSession
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val m = manifest(spark, path, v)
+      val m = head(spark, path)
+      val v = m.version
       if (m.sourceBatchId.exists(_ >= batchId)) v // replay: already committed
       else {
         requireWritable(m, path)
@@ -4242,7 +4216,7 @@ object TxLog {
         enforceConstraints(df, m.constraints, s"appendBatch(batch $batchId)")
         enforceUniques(df, spark, path, StructType.fromDDL(m.schemaDdl), m.files,
           m, s"appendBatch(batch $batchId)")
-        val files = stageIn(toPhysical(df, m.colMap), path, physPartCols(m), transformsOf(m))
+        val files = stageRows(path, m, df)
         commitRebase(spark, path, m, rewriteDirs = Set.empty, newFiles = files,
           schemaDdl = m.schemaDdl, batchId = Some(batchId),
           readSet = Some(Set.empty), operation = "STREAMING APPEND",
@@ -4284,9 +4258,8 @@ object TxLog {
     retryIdentityRace("appendTxn") {
       require(appId.nonEmpty, "TxLog.appendTxn: empty appId")
       val spark = df0.sparkSession
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val m = manifest(spark, path, v)
+      val m = head(spark, path)
+      val v = m.version
       if (m.txns.get(appId).exists(_ >= txnVersion)) v // replay
       else {
         requireWritable(m, path)
@@ -4297,7 +4270,7 @@ object TxLog {
         enforceConstraints(df, m.constraints, s"appendTxn($appId @ $txnVersion)")
         enforceUniques(df, spark, path, StructType.fromDDL(m.schemaDdl), m.files,
           m, s"appendTxn($appId @ $txnVersion)")
-        val files = stageIn(toPhysical(df, m.colMap), path, physPartCols(m), transformsOf(m))
+        val files = stageRows(path, m, df)
         commitRebase(spark, path, m, rewriteDirs = Set.empty, newFiles = files,
           schemaDdl = m.schemaDdl, batchId = None,
           readSet = Some(Set.empty),
@@ -4376,9 +4349,8 @@ object TxLog {
               zorderBy: Seq[String] = Nil,
               partitions: Seq[Any] = Nil,
               dirScope: Option[Set[String]] = None): Long = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
+    val v = m.version
     val scope: Option[Set[String]] =
       if (dirScope.isDefined) dirScope
       else if (partitions.isEmpty) None
@@ -4419,7 +4391,7 @@ object TxLog {
     // count and the union executes as a single Spark job — compaction
     // cost scales with rewritten bytes, not with partition count
     val pieces = todo.toSeq.sortBy(_._1).map { case (_, files) =>
-      val part = readFiles(spark, path, schema, files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+      val part = scanOf(spark, path, m, files)
       val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
       val n = ((bytes + BigInt(targetBytesPerFile) - 1) / targetBytesPerFile)
         .max(1).toInt
@@ -4434,8 +4406,7 @@ object TxLog {
           graft.operators.Layout.zorderedFrameN(part, cols, numFiles = n)
       }
     }
-    val newFiles = stageIn(toPhysical(pieces.reduce(_ unionByName _), m.colMap),
-      path, physPartCols(m), transformsOf(m))
+    val newFiles = stageRows(path, m, pieces.reduce(_ unionByName _))
     // a compaction reads exactly the partitions it rewrites: it rebases
     // over appends/merges to OTHER partitions (the OPTIMIZE-vs-ingest
     // guarantee) and conflicts only when ITS partitions moved under it
@@ -4446,55 +4417,33 @@ object TxLog {
         else s"OPTIMIZE ZORDER BY ${zorder.mkString(", ")}")
   }
 
-  /** Transactional merge — the plain-parquet equivalent of a Delta
-    * MERGE, with Delta's FILE-granular write economics: updates win on
-    * key collision, and the rewrite set is exactly the FILES that hold
-    * a matched key — every other file, including the rest of a hot
-    * partition, carries into the new manifest by reference and stays
-    * byte-identical on disk. A one-key merge into a date partition
-    * holding N files rewrites the one file whose stats admit the key,
-    * not the partition (r8's single biggest write-amplification gap).
+  /** Transactional upsert: update rows win on key collision and the
+    * rest of the batch inserts. It is the whole-row clause set of the
+    * one keyed-merge engine, [[mergeWhenOnce]] (UPDATE * when matched,
+    * INSERT when not), with its discovery staircase and FILE-granular
+    * write economics. A matched row takes every column of its update,
+    * layout columns included, so a key whose partition value changed
+    * moves to its new partition.
     *
-    * Discovery is three-stage, cheapest first:
-    *  1. min/max SKIP-INDEX prune (free — stats ride the manifest):
-    *     when the single merge key is a tracked stats column, only
-    *     files whose range admits the batch's key bounds are scanned;
-    *  2. Bloom-sidecar vote: for a bounded key set (≤1024 distinct),
-    *     each surviving file's point-lookup filter votes — an
-    *     id-scattered layout where min/max is useless still prunes;
-    *  3. exact membership: one key-column-pruned semi-join scan over
-    *     the surviving files collects which FILES actually hold a
-    *     matched key (file-count-bounded driver set, never data).
-    * Stats make the probe read small; exactness makes the WRITE set
-    * minimal. Inserts (keys matching nothing) land as new files in
-    * their partitions. The commit is a protocol-2 `removeFiles` delta
-    * — see [[ProtocolVersion]]. Returns the new version. */
-  /** `deletionVectors = true` switches the merge to MERGE-ON-READ
-    * (Delta's DV-based merge): instead of rewriting the files holding
-    * matched keys, the matched OLD rows' positions land as a
-    * delete-sized DV sidecar and the updates (new versions + inserts)
-    * append as new files — write cost is matched ROWS + update bytes,
-    * not matched FILES. The winner when a few keys update inside big
-    * files; OPTIMIZE later materializes. Same DV trade as
-    * [[deleteWhere]]: per-read anti-join until materialized,
-    * protocol-2 commits, append-tail refusal. */
+    * Contract: a partitioned table without IDENTITY columns (updates
+    * carry whole rows — use [[mergeWhen]], whose INSERT * allocates
+    * them); update keys unique within the batch and layout values
+    * non-null, both checked by one fused probe (null first) unless
+    * `preValidated`, when the caller owns uniqueness and only the null
+    * probe runs. `evolveSchema` widens the schema additively in the
+    * same commit; the updates must then carry every declared column.
+    * `deletionVectors = true` (or a table declaring DVs) merges on
+    * read: the matched old rows' positions land in a DV sidecar and
+    * the updates append, with no file rewritten. Returns the new
+    * version. */
   def mergeInto(path: String, updates: DataFrame, keys: Seq[String],
                 preValidated: Boolean = false,
                 evolveSchema: Boolean = false,
                 deletionVectors: Boolean = false,
                 txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit, max, min}
-    val spark = updates.sparkSession
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
-    // per-app idempotency lane (see [[appendTxn]]): a replayed CDC
-    // apply skips before staging anything
-    if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) return v
-    requireWritable(m, path)
+    val m = head(updates.sparkSession, path)
     requireAppendable(m, path, "mergeInto (an upsert rewrites matched rows)")
-    val pcs = m.partitionCols
-    require(pcs.nonEmpty,
+    require(m.partitionCols.nonEmpty,
       "TxLog.mergeInto needs a partitioned table (create with partitionCol[s])")
     require(identityColumns(m).isEmpty,
       s"TxLog.mergeInto: table has IDENTITY column(s) " +
@@ -4503,243 +4452,15 @@ object TxLog {
         "(its INSERT * allocates them)")
     val declared = StructType.fromDDL(m.schemaDdl)
     checkSchema(declared, updates.schema, evolveSchema)
-    // evolution: updates must carry every declared column (a merged row
-    // has no third place to take a value from); the EXISTING rows pad
-    // the new columns with typed nulls before the merge
-    if (evolveSchema) {
-      declared.fields.foreach(f => require(
-        updates.schema.fieldNames.contains(f.name),
-        s"TxLog.mergeInto(evolveSchema): updates must carry declared " +
-          s"column '${f.name}'"))
-      updates.schema.fieldNames.filterNot(declared.fieldNames.contains)
-        .foreach(n => require(!m.colMap.exists(_._2 == n),
-          s"TxLog.mergeInto: new column '$n' collides with the physical " +
-            "name of a renamed column"))
-    }
-    // a NULL partition value would land under __HIVE_DEFAULT_PARTITION__
-    // — outside this operator's layout contract; fail loudly instead.
-    // Hidden layouts check the TRANSFORM SOURCE columns (the derived
-    // dir value of a null source is null too)
-    val partNullCols =
-      if (m.partitionSpec.isEmpty) pcs else transformsOf(m).map(_.src)
-    val widened = if (evolveSchema) widen(declared, updates.schema) else declared
-    def padNewCols(df: DataFrame): DataFrame =
-      widened.fields.filterNot(f => declared.fieldNames.contains(f.name))
-        .foldLeft(df)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val updatesAligned =
-      if (evolveSchema) updates.select(widened.fieldNames.map(col): _*)
-      else updates
-    // batch validation, FUSED into one job (r18 opt round): the
-    // null-partition probe and the within-batch duplicate-key probe
-    // each cost a full pass over the updates; one key-grouped
-    // aggregate answers both — any group with a null-partition member
-    // or more than one row is a violation, and the violation-sized
-    // second aggregate distinguishes which error to raise (null first,
-    // the order the separate probes checked in). With `preValidated`
-    // the caller owns uniqueness and only the null probe remains.
-    val partNullFlag = partNullCols.map(col(_).isNull).reduce(_ || _)
-    // r19: the fused-validation aggregate IS the distinct update-key
-    // set the discovery scans semi-join against — persist its
-    // key-sized result for the verb (released in the finally below)
-    // so the updates shuffle by key ONCE per merge, not once for the
-    // validation and again for updKeys (guide §2: same keying, one
-    // exchange). preValidated callers own uniqueness and skip both.
-    val keyAgg: Option[DataFrame] =
-      if (preValidated) None
-      else {
-        import org.apache.spark.sql.functions.{count, when}
-        Some(updatesAligned.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__graft_c"),
-            org.apache.spark.sql.functions.max(
-              when(partNullFlag, lit(1)).otherwise(lit(0))).as("__graft_pn"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    try {
-    trace(spark, "merge: validation") {
-    if (preValidated) {
-      require(updatesAligned.filter(partNullFlag)
-        .limit(1).collect().isEmpty,
-        s"TxLog.mergeInto: null ${partNullCols.mkString("/")} values are not " +
-          "supported — merge them under an explicit sentinel partition instead")
-    } else {
-      import org.apache.spark.sql.functions.{concat_ws, when}
-      val viol = keyAgg.get
-        .filter(col("__graft_c") > 1 || col("__graft_pn") === 1)
-        .agg(
-          org.apache.spark.sql.functions.max(col("__graft_pn")).as("anyNull"),
-          org.apache.spark.sql.functions.min(when(col("__graft_c") > 1,
-            concat_ws(",", keys.map(k => col(k).cast("string")): _*)))
-            .as("dupKey"))
-        .head()
-      require(viol.isNullAt(0) || viol.getInt(0) == 0,
-        s"TxLog.mergeInto: null ${partNullCols.mkString("/")} values are not " +
-          "supported — merge them under an explicit sentinel partition instead")
-      require(viol.isNullAt(1),
-        s"TxLog.mergeInto: duplicate update rows for key " +
-          s"(${keys.mkString(",")})=(${if (viol.isNullAt(1)) "" else viol.getString(1)})")
-    }
-    }
-    // only the incoming side needs vetting: untouched rows passed at
-    // their own commit, and a merge never changes them
-    enforceConstraints(updatesAligned, m.constraints, "mergeInto updates")
-    // upsert shape: within-batch key uniqueness only (see
-    // addUniqueConstraint's cost-model scaladoc)
-    enforceUniques(updatesAligned, spark, path, widened, Nil, m,
-      "mergeInto updates (within-batch)")
-    warnUncoveredUniques(m, keys, "mergeInto")
-    // ---- discovery stage 1+2: stats range prune, then Bloom vote ----
-    // the source-key bounds double as the commit's READ declaration:
-    // mergeRebaseCheck votes concurrently-added files against them,
-    // so disjoint-key concurrent merges rebase instead of conflicting
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val statsKeyed = keys.size == 1 && m.statsCols.contains(physOf(m, keys.head))
-    val boundsRow =
-      if (!statsKeyed) None
-      else {
-        val k = keys.head
-        // bounds in the STATS encoding (timestamps as us:-micros)
-        Some(updatesAligned.agg(statsEncode(widened(k).dataType, min(col(k))),
-          statsEncode(widened(k).dataType, max(col(k)))).head())
-      }
-    val sourceEmpty = boundsRow.exists(_.isNullAt(0))
-    val keyBounds: Option[(String, String, String)] =
-      boundsRow.filterNot(_.isNullAt(0))
-        .map(b => (keys.head, b.getString(0), b.getString(1)))
-    val discoveryFiles: Seq[String] =
-      if (!statsKeyed) m.files
-      else if (sourceEmpty) Nil // empty batch: nothing matches
-      else {
-        val byStats = pruneByRange(m, widened, m.files, keys.head,
-          keyBounds.get._2, keyBounds.get._3, tz)
-        bloomPruneByKeys(spark, path, physOf(m, keys.head),
-          boundedDistinct(updatesAligned, keys.head, 1024), byStats)
-      }
-    // ---- discovery stage 3: exact — which files HOLD a matched key ----
-    // the validated key aggregate already holds exactly the distinct
-    // keys (cached); only the preValidated lane still pays a distinct
-    val updKeys = keyAgg.map(_.select(keys.map(col): _*))
-      .getOrElse(updatesAligned.select(keys.map(col): _*).distinct())
-    // declared merge-on-read covers the MERGE family too (Delta's
-    // enableDeletionVectors contract)
-    if (deletionVectors || dvDeclared(m)) {
-      // MERGE-ON-READ: the matched OLD rows' positions become a DV;
-      // the updates append whole. Within-batch key uniqueness still
-      // binds (two update rows for one key would BOTH land) — already
-      // vetted by the fused validation aggregate above.
-      // write FIRST, count from the written sidecar (one discovery
-      // scan total — the deleteWhere(dv) pattern)
-      val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-      val addDv =
-        if (discoveryFiles.isEmpty) Nil // pure insert
-        else {
-          padNewCols(readFiles(spark, path, declared, discoveryFiles,
-              m.colMap, m.dv, keepDvKey = true,
-              recoverPartitions = m.partitionSpec.isEmpty))
-            .select(keys.map(col) :+ col("_dv_key") :+ col("_dv_idx"): _*)
-            .join(updKeys, keys, "left_semi")
-            .select(col("_dv_key").as("f"),
-              col("_dv_idx").cast("long").as("row_index"))
-            .write.parquet(dvPath(path, dvName))
-          val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-            .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1))
-          if (perKey.isEmpty) {
-            fsFor(spark, path).delete(new Path(dvPath(path, dvName)), true)
-            Nil // updates matched nothing: pure insert
-          } else {
-            val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-            Seq(dvName -> perKey.map { case (suffix, n) =>
-              bySuffix.get(suffix)
-                .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-                .getOrElse(throw new IllegalStateException(
-                  s"TxLog.mergeInto(dv): scan key '$suffix' does not map " +
-                    "back to any manifest entry")) -> n
-            }.toMap)
-          }
-        }
-      val newFiles = stageIn(toPhysical(updatesAligned, m.colMap), path,
-        physPartCols(m), transformsOf(m))
-      // write-time CDC: matched olds (the same deterministic semi-join
-      // that built the DV) as preimages, their update rows as
-      // postimages, the rest of the batch as inserts
-      val cdc = captureCdc(spark, path, m, {
-        val oldMatched = padNewCols(readFiles(spark, path, declared,
-            discoveryFiles, m.colMap, m.dv,
-            recoverPartitions = m.partitionSpec.isEmpty))
-          .join(updKeys, keys, "left_semi")
-        val matchedKeys = oldMatched.select(keys.map(col): _*).distinct()
-        def shaped(df: DataFrame, t: String) =
-          df.select(widened.fieldNames.map(col).toIndexedSeq
-            :+ lit(t).as("_change_type"): _*)
-        shaped(oldMatched, "update_preimage")
-          .unionByName(shaped(
-            updatesAligned.join(matchedKeys, keys, "left_semi"),
-            "update_postimage"))
-          .unionByName(shaped(
-            updatesAligned.join(matchedKeys, keys, "left_anti"), "insert"))
-      })
-      return commitRebase(spark, path, m, rewriteDirs = Set.empty,
-        newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
-        readSet = None, operation = "MERGE (DV)", addDv = addDv, txn = txn,
-        rebaseCheck = Some(mergeRebaseCheck(widened, keyBounds, sourceEmpty,
-          discoveryFiles.toSet, addDv.flatMap(_._2.keys).toSet, tz)),
-        cdc = cdc)
-    }
-    // the file key is the _dv_key column, not input_file_name():
-    // computed inside each single-source scan, it survives the DV
-    // anti-join a deletion-vector-bearing snapshot adds to the plan
-    val hitUris: Array[String] = trace(spark, "merge: hit-file discovery") {
-      if (discoveryFiles.isEmpty) Array.empty
-      else padNewCols(readFiles(spark, path, declared, discoveryFiles,
-          m.colMap, m.dv, keepDvKey = true,
-          recoverPartitions = m.partitionSpec.isEmpty))
-        .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
-        .join(updKeys, keys, "left_semi")
-        .select("_gf").distinct().collect().map(_.getString(0))
-    }
-    val resolve = entryResolver(m.files)
-    val hitFiles = hitUris.map(resolve).toSet
-    // merge = rows of the hit files with updates applied (updates win),
-    // plus inserts; staged per-partition so moved keys land right
-    val hitRows = padNewCols(readFiles(spark, path, declared, hitFiles.toSeq, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty))
-    // preValidated = true: within-batch uniqueness was vetted by the
-    // fused validation aggregate at the top of this verb
-    val merged = graft.operators.Upsert.mergeByKey(
-      hitRows, updatesAligned, keys, preValidated = true)
-    val newFiles = trace(spark, "merge: rewrite+stageIn") {
-      stageIn(toPhysical(merged, m.colMap), path, physPartCols(m), transformsOf(m))
-    }
-    // the read declaration is FILE-granular (mergeRebaseCheck): an
-    // interleaved commit conflicts only when it touches what this
-    // merge read/rewrites or adds files that may hold merged keys —
-    // anything else rebases; an actual overlap still throws
-    // CommitConflictException rather than silently dropping the
-    // winner's rows (recompute and re-merge)
-    val cdc = captureCdc(spark, path, m, {
-      val oldMatched = hitRows.join(updKeys, keys, "left_semi")
-      val matchedKeys = oldMatched.select(keys.map(col): _*).distinct()
-      def shaped(df: DataFrame, t: String) =
-        df.select(widened.fieldNames.map(col).toIndexedSeq
-          :+ lit(t).as("_change_type"): _*)
-      shaped(oldMatched, "update_preimage")
-        .unionByName(shaped(
-          updatesAligned.join(matchedKeys, keys, "left_semi"),
-          "update_postimage"))
-        .unionByName(shaped(
-          updatesAligned.join(matchedKeys, keys, "left_anti"), "insert"))
-    })
-    trace(spark, "merge: commitRebase") {
-      commitRebase(spark, path, m, rewriteDirs = Set.empty,
-        newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
-        readSet = None, operation = "MERGE", removeFiles = hitFiles, txn = txn,
-        rebaseCheck = Some(mergeRebaseCheck(widened, keyBounds, sourceEmpty,
-          discoveryFiles.toSet, hitFiles, tz)), cdc = cdc)
-    }
-    // every consumer of keyAgg (validation head, DV sidecar write, CDC
-    // capture, hit-file collects) has executed by commit time — both
-    // return paths release the cached key set through this finally
-    } finally keyAgg.foreach(_.unpersist(blocking = false))
+    // an update replaces the whole row: it has no third place to take
+    // a value from
+    declared.fields.foreach(f => require(updates.columns.contains(f.name),
+      s"TxLog.mergeInto: updates must carry declared column '${f.name}'"))
+    mergeWhenOnce(m, path, updates, keys,
+      matched = Seq(MergeClause(None, "update", setAll(updates.columns.toSeq))),
+      notMatched = Seq(MergeClause(None, "insert")), notMatchedBySource = Nil,
+      deletionVectors, txn, evolveSchema,
+      MergeCaller("mergeInto", "MERGE", "update", wholeRow = true, preValidated))
   }
 
   /** One WHEN clause of [[mergeWhen]]. `condition` is a SQL boolean
@@ -4758,6 +4479,25 @@ object TxLog {
       s"MergeClause($action): SET assignments only apply to update")
   }
 
+  /** UPDATE * as SET assignments: every named column from the source. */
+  private def setAll(cols: Seq[String]): Seq[(String, String)] =
+    cols.map(c => c -> s"src.`${c.replace("`", "``")}`")
+
+  /** Who drives [[mergeWhenOnce]]: `verb` names the caller in errors,
+    * `op` is the commit's operation name, `rows` names its source rows.
+    * A `wholeRow` caller ([[mergeInto]], [[applyChanges]]) passes a
+    * source carrying every column, MATCHED conditions over `src` only,
+    * and an UPDATE clause that assigns every column under its INSERT
+    * clause's condition: the rows that condition admits land whole,
+    * matched or not. Its UPDATE may assign layout columns (the row
+    * moves partition), and those rows are vetted — null layout values,
+    * CHECK, within-batch UNIQUE — before discovery instead of as
+    * written rows after it. `preValidated` skips the duplicate-key
+    * probe (the caller owns uniqueness). */
+  private case class MergeCaller(verb: String, op: String, rows: String,
+                                 wholeRow: Boolean = false,
+                                 preValidated: Boolean = false)
+
   /** The full conditional MERGE (Delta/SQL:2003 grammar): per
     * joined-row disposition by the FIRST clause whose condition holds
     * —
@@ -4766,15 +4506,8 @@ object TxLog {
     *  - `notMatched` (source row matches no target row): INSERT *;
     *  - `notMatchedBySource` (target row matches no source row):
     *    DELETE — the "make target mirror source" sync shape.
-    * Unmatched-by-any-clause rows carry unchanged.
-    *
-    * Write economics follow [[mergeInto]]: without a
-    * `notMatchedBySource` clause the rewrite set is exactly the FILES
-    * holding a matched key (stats prune + Bloom vote + exact
-    * membership scan); with one, every target row must be inspected —
-    * the rewrite is the whole table, Delta's cost for the same clause.
-    * The commit is one protocol-2 `removeFiles` delta either way:
-    * readers see the old snapshot until the single rename.
+    * Unmatched-by-any-clause rows carry unchanged. Discovery and write
+    * economics are the engine's, [[mergeWhenOnce]].
     *
     * Contracts: source keys must be unique within the batch (which
     * clause wins would otherwise be load-bearing row order); INSERT
@@ -4783,8 +4516,9 @@ object TxLog {
     * directory is [[updateWhere]]'s job — merge on the key instead);
     * CHECK constraints re-vet every written row. Returns the new
     * version (the unchanged current one when nothing matched any
-    * clause). */
-  /** `deletionVectors = true` switches the conditional merge to
+    * clause).
+    *
+    * `deletionVectors = true` switches the conditional merge to
     * MERGE-ON-READ: every actioned target row's position lands in a
     * delete-sized DV sidecar (an UPDATE's old version and a DELETE
     * both), the updated images and inserts append as new files, and
@@ -4793,8 +4527,9 @@ object TxLog {
     * files; with a NOT MATCHED BY SOURCE clause it is the difference
     * between a whole-table rewrite and a delete-sized sidecar. Same
     * DV trade as [[deleteWhere]]: per-read anti-join until OPTIMIZE
-    * materializes. */
-  /** `evolveSchema = true` additionally admits source columns the
+    * materializes.
+    *
+    * `evolveSchema = true` additionally admits source columns the
     * table does not have yet: the manifest's schema WIDENS in the same
     * commit ([[widen]] — additive-only, same contract as
     * [[append]]/[[mergeInto]] evolution), existing rows read the new
@@ -4812,20 +4547,65 @@ object TxLog {
     // identity allocation races re-run the whole merge from the new
     // head — the body derives everything from a fresh manifest read,
     // so a re-run is a recompute, never a double-apply
-    retryIdentityRace("mergeWhen")(mergeWhenOnce(path, source, keys,
-      matched, notMatched, notMatchedBySource, deletionVectors, txn,
-      evolveSchema))
+    retryIdentityRace("mergeWhen") {
+      val m = head(source.sparkSession, path)
+      checkSchema(StructType.fromDDL(m.schemaDdl), source.schema, evolveSchema)
+      mergeWhenOnce(m, path, source, keys, matched, notMatched,
+        notMatchedBySource, deletionVectors, txn, evolveSchema,
+        MergeCaller("mergeWhen", "MERGE WHEN", "source"))
+    }
 
-  private def mergeWhenOnce(path: String, source: DataFrame, keys: Seq[String],
+  /** The keyed-merge engine behind [[mergeWhen]], [[mergeInto]] and
+    * [[applyChanges]]: `source` rows meet the snapshot `m` on `keys`
+    * and each joined row takes the first clause that holds. The write
+    * set is FILE-granular (Delta's economics): exactly the files that
+    * hold a matched key rewrite; every other file, including the rest
+    * of a hot partition, carries into the new manifest by reference
+    * and stays byte-identical on disk.
+    *
+    * Validation is one fused, persisted key aggregate over the source:
+    * it finds duplicate keys and (for whole-row callers) null layout
+    * values, null first, and then serves as the distinct source-key
+    * set the discovery semi-join reads.
+    *
+    * Discovery is three-stage, cheapest first:
+    *  1. min/max SKIP-INDEX prune (free — stats ride the manifest):
+    *     when the single merge key is a tracked stats column, only
+    *     files whose range admits the batch's key bounds are scanned;
+    *  2. Bloom-sidecar vote: for a bounded key set (≤1024 distinct),
+    *     each surviving file's point-lookup filter votes — an
+    *     id-scattered layout where min/max is useless still prunes;
+    *  3. exact membership: one key-column-pruned semi-join scan over
+    *     the surviving files collects which FILES actually hold a
+    *     matched key (file-count-bounded driver set, never data).
+    * Stats make the probe read small; exactness makes the WRITE set
+    * minimal. The hit files hold every matched key, so NOT MATCHED
+    * rows are the source anti-joined to them — no second discovery
+    * scan. A NOT MATCHED BY SOURCE clause makes every target row
+    * load-bearing: the rewrite is the whole table, Delta's cost for
+    * the same clause. MERGE-ON-READ (`deletionVectors`, or a table
+    * declaring DVs) instead materializes the matched and actioned
+    * rows once: the DV sidecar, the updated images and the insert
+    * anti-join all derive from that one set, and no file rewrites.
+    *
+    * The commit is one protocol-2 delta ([[ProtocolVersion]]) whose
+    * read declaration is FILE-granular ([[mergeRebaseCheck]]):
+    * concurrent merges into disjoint keys rebase, an overlap throws
+    * [[CommitConflictException]]. A merge whose clauses all no-op
+    * still seals its txn lane and, under `evolveSchema`, still widens. */
+  private def mergeWhenOnce(m: Manifest, path: String, source: DataFrame,
+                            keys: Seq[String],
                             matched: Seq[MergeClause],
                             notMatched: Seq[MergeClause],
                             notMatchedBySource: Seq[MergeClause],
                             deletionVectors: Boolean,
                             txn: Option[(String, Long)],
-                            evolveSchema: Boolean): Long = {
-    import org.apache.spark.sql.functions.{col, expr, lit, max, min, struct, when}
+                            evolveSchema: Boolean,
+                            caller: MergeCaller): Long = {
+    import org.apache.spark.sql.functions.{col, concat_ws, count, expr, lit, max, min, struct, when}
     val spark = source.sparkSession
-    require(keys.nonEmpty, "TxLog.mergeWhen: empty key set")
+    val verb = caller.verb
+    require(keys.nonEmpty, s"TxLog.$verb: empty key set")
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "TxLog.mergeWhen: no WHEN clauses")
     require(matched.forall(c => c.action == "update" || c.action == "delete"),
@@ -4834,15 +4614,13 @@ object TxLog {
       "TxLog.mergeWhen: WHEN NOT MATCHED supports a single INSERT clause")
     require(notMatchedBySource.forall(_.action == "delete"),
       "TxLog.mergeWhen: WHEN NOT MATCHED BY SOURCE supports DELETE")
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
     // per-app idempotency lane (see [[appendTxn]]); a merge whose
     // clauses all no-op still SEALS the watermark ([[sealNoopTxn]]) —
     // the table can change between delivery and redelivery, so an
     // unsealed lane would let the replay apply effects the original
     // did not
-    if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) return v
+    if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) })
+      return m.version
     requireWritable(m, path)
     // an INSERT-only merge appends — permitted under appendOnly; any
     // matched / not-matched-by-source clause updates or deletes
@@ -4850,7 +4628,6 @@ object TxLog {
       requireAppendable(m, path,
         "mergeWhen with MATCHED / NOT MATCHED BY SOURCE clauses")
     val declared = StructType.fromDDL(m.schemaDdl)
-    checkSchema(declared, source.schema, evolveSchema)
     // evolution: new columns take their LOGICAL name as the physical
     // slot — refuse collisions with renamed/dropped slots and derived
     // hidden-partition dir names (same gates as [[append]] evolution)
@@ -4858,11 +4635,11 @@ object TxLog {
       source.schema.fieldNames.filterNot(declared.fieldNames.contains)
         .foreach { n =>
           require(!m.colMap.exists(_._2 == n),
-            s"TxLog.mergeWhen: new column '$n' collides with the physical " +
+            s"TxLog.$verb: new column '$n' collides with the physical " +
               "slot of a renamed or dropped column — add it via " +
               "TxLog.addColumn first")
           require(!m.partitionCols.contains(n),
-            s"TxLog.mergeWhen: new column '$n' collides with a derived " +
+            s"TxLog.$verb: new column '$n' collides with a derived " +
               "hidden partition directory name")
         }
     val widened = if (evolveSchema) widen(declared, source.schema) else declared
@@ -4872,6 +4649,8 @@ object TxLog {
       widened.fields.filterNot(f => declared.fieldNames.contains(f.name))
         .foldLeft(df)((d, f) =>
           d.withColumn(f.name, lit(null).cast(f.dataType)))
+    def scan(files: Iterable[String], keepDvKey: Boolean = false): DataFrame =
+      padNewCols(scanOf(spark, path, m, files, keepDvKey))
     // a no-op merge under evolveSchema still WIDENS: schema presence
     // must not depend on whether this particular batch matched rows
     // (the CDC window that grew a column but touched nothing would
@@ -4888,7 +4667,7 @@ object TxLog {
         "the clause namespace reserves it for the source-row struct")
     keys.foreach(k => require(declared.fieldNames.contains(k) &&
       source.columns.contains(k),
-      s"TxLog.mergeWhen: key '$k' must exist on both sides"))
+      s"TxLog.$verb: key '$k' must exist on both sides"))
     // IDENTITY columns are engine-assigned end to end: the source may
     // not carry them (GENERATED ALWAYS), SET may not assign them (the
     // gate below), and INSERT * fills them from the high-water mark
@@ -4901,35 +4680,86 @@ object TxLog {
         generatedColumns(m).keySet ++ identityColumns(m).keySet
       widened.fields.foreach(f => require(
         source.columns.contains(f.name) || policyCols.contains(f.name),
-        s"TxLog.mergeWhen: INSERT * needs source column '${f.name}' " +
+        s"TxLog.$verb: INSERT * needs source column '${f.name}' " +
           "(only DEFAULT/GENERATED/IDENTITY columns may be omitted)"))
     }
     // assigning a layout column would silently leave the row in its
     // old directory — refuse, as updateWhere's relocation contract
-    // doesn't compose with the clause engine
-    val layoutCols = (if (m.partitionSpec.isEmpty) m.partitionCols
-                      else transformsOf(m).map(_.src)).toSet
+    // doesn't compose with the clause engine; a whole-row caller
+    // restages the row, so its UPDATE * may move it
+    val layoutCols =
+      if (m.partitionSpec.isEmpty) m.partitionCols else transformsOf(m).map(_.src)
     matched.flatMap(_.sets).foreach { case (c, _) =>
       require(widened.fieldNames.contains(c),
         s"TxLog.mergeWhen: SET names unknown column '$c'")
-      require(!layoutCols.contains(c),
+      require(caller.wholeRow || !layoutCols.contains(c),
         s"TxLog.mergeWhen: SET may not assign layout column '$c'")
       require(!identityColumns(m).contains(c),
         s"TxLog.mergeWhen: SET may not assign IDENTITY column '$c'")
     }
-    // ambiguous-winner guard: one source row per key
-    val dup = graft.operators.Upsert.pkViolations(source, keys)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      s"TxLog.mergeWhen: duplicate source rows for key (${keys.mkString(",")})")
-    warnUncoveredUniques(m, keys, "mergeWhen")
-    // ---- discovery (same staircase as mergeInto) ----
+    def clauseCond(c: MergeClause): org.apache.spark.sql.Column =
+      c.condition.map(expr).getOrElse(lit(true))
+    val srcView = source.withColumn("src", struct(source.columns.map(col): _*))
+    // the source rows a whole-row caller writes with THEIR layout
+    // values: a null one would land under __HIVE_DEFAULT_PARTITION__,
+    // outside the layout contract (hidden layouts check the transform
+    // SOURCE columns — a null source derives a null dir value)
+    val lands = notMatched.headOption.map(clauseCond).getOrElse(lit(true))
+    val nullLayout =
+      if (!caller.wholeRow) lit(false)
+      else lands && layoutCols.map(col(_).isNull).foldLeft(lit(false))(_ || _)
+    val nullMsg = s"TxLog.$verb: null ${layoutCols.mkString("/")} values are " +
+      "not supported — merge them under an explicit sentinel partition instead"
+    // fused validation: one key-grouped aggregate flags both violation
+    // classes, and the violation-sized second aggregate picks the error
+    // (null first). Persisted, it IS the distinct source-key set the
+    // discovery semi-join reads, so the source shuffles by key once per
+    // merge (released in the finally below).
+    val keyAgg: Option[DataFrame] =
+      if (caller.preValidated) None
+      else Some(srcView.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__graft_c"),
+          max(when(nullLayout, lit(1)).otherwise(lit(0))).as("__graft_pn"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try {
+    keyAgg match {
+      case None =>
+        if (caller.wholeRow)
+          require(srcView.filter(nullLayout).limit(1).collect().isEmpty, nullMsg)
+      case Some(agg) =>
+        val viol = agg.filter(col("__graft_c") > 1 || col("__graft_pn") === 1)
+          .agg(max(col("__graft_pn")),
+            min(when(col("__graft_c") > 1,
+              concat_ws(",", keys.map(k => col(k).cast("string")): _*))))
+          .head()
+        require(viol.isNullAt(0) || viol.getInt(0) == 0, nullMsg)
+        require(viol.isNullAt(1),
+          s"TxLog.$verb: duplicate ${caller.rows} rows for key " +
+            s"(${keys.mkString(",")})=(${if (viol.isNullAt(1)) "" else viol.getString(1)})")
+    }
+    // the source rows a whole-row clause set writes, whole
+    lazy val landing = srcView.filter(lands)
+      .select(widened.fieldNames.map(col).toIndexedSeq: _*)
+    if (caller.wholeRow) {
+      // only the incoming side needs vetting: untouched rows passed at
+      // their own commit; UNIQUE is within-batch only (see
+      // addUniqueConstraint's cost model)
+      enforceConstraints(landing, m.constraints, s"$verb ${caller.rows} rows")
+      enforceUniques(landing, spark, path, widened, Nil, m,
+        s"$verb ${caller.rows} rows (within-batch)")
+    }
+    warnUncoveredUniques(m, keys, verb)
+    // ---- discovery stages 1+2: stats range prune, then Bloom vote ----
+    // the source-key bounds double as the commit's READ declaration:
+    // mergeRebaseCheck votes concurrently-added files against them,
+    // so disjoint-key concurrent merges rebase instead of conflicting
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     val statsKeyed = keys.size == 1 && m.statsCols.contains(physOf(m, keys.head))
     val boundsRow =
       if (!statsKeyed) None
       else {
         val k = keys.head
+        // bounds in the STATS encoding (timestamps as us:-micros)
         Some(source.agg(
           statsEncode(declared(k).dataType, min(col(k))),
           statsEncode(declared(k).dataType, max(col(k)))).head())
@@ -4959,11 +4789,9 @@ object TxLog {
       else
         mergeRebaseCheck(widened, None, sourceEmpty = false,
           m.files.toSet, touched, tz)
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    val srcStructed = source.select(
-      keys.map(col) :+ struct(source.columns.map(col): _*).as("src"): _*)
-    def clauseCond(c: MergeClause): org.apache.spark.sql.Column =
-      c.condition.map(expr).getOrElse(lit(true))
+    val srcKeys = keyAgg.map(_.select(keys.map(col): _*))
+      .getOrElse(source.select(keys.map(col): _*).distinct())
+    val srcStructed = srcView.select(keys.map(col) :+ col("src"): _*)
     // disposition: first-true clause index; -1 = carry unchanged.
     // matched and not-matched-by-source branches are disjoint on
     // src's nullness, so one chain serves both
@@ -4985,177 +4813,197 @@ object TxLog {
           when(col("_act") === i, expr(setExpr)).otherwise(rest)
         }.cast(f.dataType).as(f.name)
       }.toSeq: _*)
-    // the insert decision anti-joins the DISCOVERY scan, not the
-    // rewrite scope: an insert-only merge rewrites nothing, but a
-    // source row whose key exists in the table must still not insert
-    val insertsAndClaims: Option[(DataFrame, Map[String, (Long, Long)])] =
-      notMatched.headOption.map { c =>
-        val existingKeys = readFiles(spark, path, declared, discoveryFiles,
-            m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
-          .select(keys.map(col): _*).distinct()
-        val landed = source
-          .withColumn("src", struct(source.columns.map(col): _*))
-          .join(existingKeys, keys.toSeq, "left_anti")
-          .filter(clauseCond(c))
-          .select(source.columns.map(col).toIndexedSeq: _*)
-        // INSERT * is insert-shaped: omitted DEFAULT columns fill,
-        // omitted GENERATED columns compute, and omitted IDENTITY
-        // columns allocate — same as the append family; the claims
-        // ride this merge's commit
-        val (filled, claims) = fillIdentityColumns(
-          fillPolicyColumns(landed, m, widened), m, "mergeWhen")
-        (filled.select(widened.fieldNames.map(col).toSeq: _*), claims)
+    // INSERT * is insert-shaped: the source rows whose key is in none
+    // of `targetKeys` (None = no target row can match) fill omitted
+    // DEFAULT columns, compute omitted GENERATED columns and allocate
+    // IDENTITY — same as the append family; the claims ride this
+    // merge's commit
+    def insertsAgainst(targetKeys: Option[DataFrame])
+        : (Option[DataFrame], Map[String, (Long, Long)]) =
+      notMatched.headOption match {
+        case None => (None, Map.empty)
+        case Some(c) =>
+          val landed = targetKeys.fold(srcView)(srcView.join(_, keys, "left_anti"))
+            .filter(clauseCond(c))
+            .select(source.columns.map(col).toIndexedSeq: _*)
+          val (filled, claims) = fillIdentityColumns(
+            fillPolicyColumns(landed, m, widened), m, verb)
+          (Some(filled.select(widened.fieldNames.map(col).toSeq: _*)), claims)
       }
-    val inserts: Option[DataFrame] = insertsAndClaims.map(_._1)
-    val idClaims: Map[String, (Long, Long)] =
-      insertsAndClaims.map(_._2).getOrElse(Map.empty)
-    val partNullCols =
-      if (m.partitionSpec.isEmpty) m.partitionCols
-      else transformsOf(m).map(_.src)
-    def vetWritten(written: DataFrame, op: String): Unit = {
-      enforceConstraints(written, m.constraints, op)
-      // mirror mergeInto's UNIQUE cost model: within-batch only over
-      // what this commit writes (an INSERT or a SET on a unique column
-      // could otherwise silently duplicate); collisions against
-      // UNTOUCHED files are the uncovered-keys trade flagged loudly by
-      // warnUncoveredUniques above
-      enforceUniques(written, spark, path, widened, Nil, m,
-        s"$op written rows (within-batch)")
-      if (partNullCols.nonEmpty)
-        require(written.filter(partNullCols.map(col(_).isNull).reduce(_ || _))
-          .limit(1).collect().isEmpty,
-          s"TxLog.$op: null ${partNullCols.mkString("/")} values are " +
-            "not supported — merge them under an explicit sentinel instead")
-    }
+    def vetWritten(written: DataFrame, op: String): Unit =
+      if (!caller.wholeRow) {
+        enforceConstraints(written, m.constraints, op)
+        // within-batch UNIQUE over what this commit writes (an INSERT
+        // or a SET on a unique column could otherwise silently
+        // duplicate); collisions against UNTOUCHED files are the
+        // uncovered-keys trade flagged by warnUncoveredUniques above
+        enforceUniques(written, spark, path, widened, Nil, m,
+          s"$op written rows (within-batch)")
+        if (layoutCols.nonEmpty)
+          require(written.filter(layoutCols.map(col(_).isNull).reduce(_ || _))
+            .limit(1).collect().isEmpty,
+            s"TxLog.$op: null ${layoutCols.mkString("/")} values are " +
+              "not supported — merge them under an explicit sentinel instead")
+      }
+    def shaped(df: DataFrame, t: String): DataFrame =
+      df.select(widened.fieldNames.map(col).toIndexedSeq
+        :+ lit(t).as("_change_type"): _*)
+    // write-time CDC from the joined rows: deletes carry the old row,
+    // updates exact pre/postimages, inserts the filled rows
+    def changeRows(acted: DataFrame, images: => DataFrame,
+                   inserts: Option[DataFrame]): DataFrame =
+      ((if (deletes.isEmpty) Nil
+        else Seq(shaped(acted.filter(col("_act").isInCollection(deletes)), "delete"))) ++
+       (if (updateIdx.isEmpty) Nil
+        else Seq(shaped(acted.filter(col("_act").isInCollection(updateIdx)),
+          "update_preimage"), shaped(images, "update_postimage"))) ++
+       inserts.map(shaped(_, "insert")).toSeq).reduce(_ unionByName _)
+    def acted(files: Iterable[String], keepDvKey: Boolean = false): DataFrame =
+      scan(files, keepDvKey).join(srcStructed, keys.toSeq, "left_outer")
+        .withColumn("_act", actCol)
+    // A whole-row clause set writes its landing rows whole, matched or
+    // not, and its MATCHED conditions read only `src`: the target rows
+    // it acts on are those whose key an admitted source row carries.
+    // Its write is mergeByKey's shape — the landing rows beside the
+    // scope rows anti-joined to those keys — not a join per side.
+    lazy val actingKeys: DataFrame =
+      if (matched.forall(_.condition.isEmpty)) srcKeys
+      else srcView.filter(matched.map(clauseCond).reduce(_ || _))
+        .select(keys.map(col): _*)
+    val op = caller.op
     if (deletionVectors || dvDeclared(m)) {
-      // MERGE-ON-READ: one scan of the scope materializes every
-      // ACTIONED row with its position (the updateWhere(dv) pattern);
-      // the DV and the updated images both derive from that single
-      // materialization — no file rewrites at all
+      // MERGE-ON-READ: one scan of the scope materializes every matched
+      // or actioned target row with its position (the updateWhere(dv)
+      // pattern); the DV, the updated images and the insert anti-join
+      // all derive from that single materialization. A whole-row set
+      // has no images to keep consistent with the DV: its join stays
+      // lazy and its landing rows append.
       val scanFiles: Seq[String] =
         if (notMatchedBySource.nonEmpty) m.files else discoveryFiles
-      if (scanFiles.isEmpty && inserts.isEmpty)
-        return sealOrWiden("MERGE WHEN (DV)")
+      if (scanFiles.isEmpty && notMatched.isEmpty)
+        return sealOrWiden(s"$op (DV)")
       val tmp = new Path(path,
         s"_tmp_update_${java.util.UUID.randomUUID().toString.take(12)}")
-      val fsx = fsFor(spark, path)
       try {
-        if (scanFiles.nonEmpty)
-          padNewCols(readFiles(spark, path, declared, scanFiles, m.colMap,
-              m.dv, keepDvKey = true,
-              recoverPartitions = m.partitionSpec.isEmpty))
-            .join(srcStructed, keys.toSeq, "left_outer")
-            .withColumn("_act", actCol)
-            .filter(col("_act") =!= -1)
-            .write.parquet(tmp.toString)
-        val actioned: Option[DataFrame] =
+        val joined: Option[DataFrame] =
           if (scanFiles.isEmpty) None
-          else Some(spark.read.parquet(tmp.toString))
+          else if (caller.wholeRow) Some(acted(scanFiles, keepDvKey = true))
+          else {
+            acted(scanFiles, keepDvKey = true)
+              .filter(col("_act") =!= -1 || col("src").isNotNull)
+              .write.parquet(tmp.toString)
+            Some(spark.read.parquet(tmp.toString))
+          }
+        val actioned = joined.map(_.filter(col("_act") =!= -1))
+        val (inserts, idClaims) = insertsAgainst(joined.map(
+          _.filter(col("src").isNotNull).select(keys.map(col): _*)))
         val images: Option[DataFrame] =
           if (updateIdx.isEmpty) None
           else actioned.map(a =>
             applyUpdates(a.filter(col("_act").isInCollection(updateIdx))))
-        val written: Option[DataFrame] = (images.toSeq ++ inserts.toSeq)
-          .reduceOption(_ unionByName _)
-        written.foreach(vetWritten(_, "mergeWhen(dv)"))
-        val addDv: Seq[(String, Map[String, Long])] =
-          if (actioned.forall(_.isEmpty)) Nil
-          else {
-            val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-            actioned.get.select(col("_dv_key").as("f"),
-                col("_dv_idx").cast("long").as("row_index"))
-              .write.parquet(dvPath(path, dvName))
-            val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-              .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-              .collect().map(r => r.getString(0) -> r.getLong(1))
-            val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-            Seq(dvName -> perKey.map { case (suffix, n) =>
-              bySuffix.get(suffix)
-                .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-                .getOrElse(throw new IllegalStateException(
-                  s"TxLog.mergeWhen(dv): scan key '$suffix' does not map " +
-                    "back to any manifest entry")) -> n
-            }.toMap)
-          }
-        val staged = written.map(w => stageIn(toPhysical(w, m.colMap), path,
-          physPartCols(m), transformsOf(m))).getOrElse(Nil)
+        val written: Option[DataFrame] =
+          if (caller.wholeRow) Some(landing)
+          else (images.toSeq ++ inserts.toSeq).reduceOption(_ unionByName _)
+        written.foreach(vetWritten(_, s"$verb(dv)"))
+        val addDv =
+          if (actions.isEmpty) Nil // insert-only: no target row is touched
+          else if (caller.wholeRow)
+            writeDv(spark, path, m, scan(scanFiles, keepDvKey = true)
+              .join(actingKeys, keys, "left_semi")).toSeq
+          else actioned.flatMap(writeDv(spark, path, m, _)).toSeq
+        val staged = written.map(stageRows(path, m, _)).getOrElse(Nil)
         if (addDv.isEmpty && staged.isEmpty) // nothing matched any clause
-          return sealOrWiden("MERGE WHEN (DV)")
-        // write-time CDC from the ONE materialized actioned set:
-        // deletes carry the old row, updates exact pre/postimages,
-        // inserts the filled rows
-        val cdc = captureCdc(spark, path, m, {
-          def shaped(df: DataFrame, t: String) =
-            df.select(widened.fieldNames.map(col).toIndexedSeq
-              :+ lit(t).as("_change_type"): _*)
-          val parts =
-            actioned.filter(_ => deletes.nonEmpty).map(a =>
-              shaped(a.filter(col("_act").isInCollection(deletes)), "delete")).toSeq ++
-            actioned.filter(_ => updateIdx.nonEmpty).map(a =>
-              shaped(a.filter(col("_act").isInCollection(updateIdx)),
-                "update_preimage")).toSeq ++
-            images.map(shaped(_, "update_postimage")).toSeq ++
-            inserts.map(shaped(_, "insert")).toSeq
-          parts.reduce(_ unionByName _)
-        })
-        return commitRebase(spark, path, m, rewriteDirs = Set.empty,
+          return sealOrWiden(s"$op (DV)")
+        val cdc = captureCdc(spark, path, m,
+          actioned.fold(inserts.map(shaped(_, "insert")).get)(a =>
+            changeRows(a, images.get, inserts)))
+        commitRebase(spark, path, m, rewriteDirs = Set.empty,
           newFiles = staged, schemaDdl = widened.toDDL, batchId = None,
-          readSet = None, operation = "MERGE WHEN (DV)", addDv = addDv,
+          readSet = None, operation = s"$op (DV)", addDv = addDv,
           txn = txn, rebaseCheck = Some(whenRebaseCheck(scanFiles.toSet,
             addDv.flatMap(_._2.keys).toSet)), idClaims = idClaims,
           cdc = cdc)
-      } finally fsx.delete(tmp, true)
+      } finally fsFor(spark, path).delete(tmp, true)
+    } else {
+      val hit: Set[String] =
+        if (matched.isEmpty) Set.empty
+        else hitFiles(spark, path, m, discoveryFiles)(
+          _.join(srcKeys, keys, "left_semi"))
+      val scopeFiles: Set[String] =
+        if (notMatchedBySource.nonEmpty) m.files.toSet else hit
+      // the hit files hold every matched key; without a MATCHED clause
+      // none were collected and the discovery candidates stand in
+      val (inserts, idClaims) = insertsAgainst(Some(
+        scan(if (matched.isEmpty) discoveryFiles else hit)
+          .select(keys.map(col): _*)))
+      if (scopeFiles.isEmpty && inserts.isEmpty)
+        return sealOrWiden(op)
+      val scope = acted(scopeFiles)
+      val written =
+        if (caller.wholeRow)
+          scan(scopeFiles).join(actingKeys, keys, "left_anti").unionByName(landing)
+        else {
+          val rewritten = applyUpdates(
+            if (deletes.isEmpty) scope
+            else scope.filter(!col("_act").isInCollection(deletes)))
+          inserts.fold(rewritten)(rewritten.unionByName(_))
+        }
+      vetWritten(written, verb)
+      val newFiles = stageRows(path, m, written)
+      if (scopeFiles.isEmpty && newFiles.isEmpty) return sealOrWiden(op)
+      val cdc = captureCdc(spark, path, m, changeRows(scope,
+        applyUpdates(scope.filter(col("_act").isInCollection(updateIdx))),
+        inserts))
+      commitRebase(spark, path, m, rewriteDirs = Set.empty,
+        newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
+        readSet = None, operation = op, removeFiles = scopeFiles,
+        txn = txn, rebaseCheck = Some(whenRebaseCheck(
+          discoveryFiles.toSet ++ scopeFiles, scopeFiles)),
+        idClaims = idClaims, cdc = cdc)
     }
-    val hitFiles: Set[String] =
-      if (discoveryFiles.isEmpty || matched.isEmpty) Set.empty
-      else {
-        val resolve = entryResolver(m.files)
-        readFiles(spark, path, declared, discoveryFiles, m.colMap, m.dv,
-            keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
-          .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
-          .join(srcKeys, keys, "left_semi")
-          .select("_gf").distinct().collect().map(r => resolve(r.getString(0)))
-          .toSet
-      }
-    val scopeFiles: Set[String] =
-      if (notMatchedBySource.nonEmpty) m.files.toSet else hitFiles
-    val scopeRows = padNewCols(readFiles(spark, path, declared,
-      scopeFiles.toSeq, m.colMap, m.dv,
-      recoverPartitions = m.partitionSpec.isEmpty))
-    val acted = scopeRows.join(srcStructed, keys.toSeq, "left_outer")
-      .withColumn("_act", actCol)
-    val rewritten = applyUpdates(
-      if (deletes.isEmpty) acted
-      else acted.filter(!col("_act").isInCollection(deletes)))
-    if (scopeFiles.isEmpty && inserts.isEmpty)
-      return sealOrWiden("MERGE WHEN")
-    val written = inserts.fold(rewritten)(rewritten.unionByName(_))
-    vetWritten(written, "mergeWhen")
-    val newFiles = stageIn(toPhysical(written, m.colMap), path,
-      physPartCols(m), transformsOf(m))
-    val cdc = captureCdc(spark, path, m, {
-      def shaped(df: DataFrame, t: String) =
-        df.select(widened.fieldNames.map(col).toIndexedSeq
-          :+ lit(t).as("_change_type"): _*)
-      val parts =
-        (if (deletes.isEmpty) Nil
-         else Seq(shaped(acted.filter(col("_act").isInCollection(deletes)),
-           "delete"))) ++
-        (if (updateIdx.isEmpty) Nil
-         else {
-           val upd = acted.filter(col("_act").isInCollection(updateIdx))
-           Seq(shaped(upd, "update_preimage"),
-             shaped(applyUpdates(upd), "update_postimage"))
-         }) ++
-        inserts.map(shaped(_, "insert")).toSeq
-      parts.reduce(_ unionByName _)
-    })
-    commitRebase(spark, path, m, rewriteDirs = Set.empty,
-      newFiles = newFiles, schemaDdl = widened.toDDL, batchId = None,
-      readSet = None, operation = "MERGE WHEN", removeFiles = scopeFiles,
-      txn = txn, rebaseCheck = Some(whenRebaseCheck(
-        discoveryFiles.toSet ++ scopeFiles, scopeFiles)),
-      idClaims = idClaims, cdc = cdc)
+    // every consumer of keyAgg (validation head, discovery collect,
+    // DV materialization, staging, CDC capture) has run by commit time
+    } finally keyAgg.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Exact hit-file discovery, shared by every row-level DML verb: the
+    * manifest entries among `files` holding a row that `keep` retains.
+    * One scan keyed by `_dv_key`, not input_file_name(): computed
+    * inside each single-source scan, it survives the DV anti-join a
+    * deletion-vector-bearing snapshot adds to the plan. The collected
+    * set is bounded by the live file count, never by data. */
+  private def hitFiles(spark: SparkSession, path: String, m: Manifest,
+                       files: Seq[String])(keep: DataFrame => DataFrame): Set[String] =
+    if (files.isEmpty) Set.empty
+    else {
+      val resolve = entryResolver(m.files)
+      keep(scanOf(spark, path, m, files, keepDvKey = true))
+        .select("_dv_key").distinct().collect()
+        .map(r => resolve(r.getString(0))).toSet
+    }
+
+  /** Write the deletion-vector sidecar for the positions of `rows` (the
+    * `_dv_key`/`_dv_idx` columns of a keepDvKey scan) and return it as
+    * a commit's `addDv` entry: sidecar name -> deleted rows per
+    * manifest entry. Counts come from the WRITTEN sidecar, so the
+    * commit describes exactly the bytes on disk even under a
+    * non-deterministic predicate. An empty sidecar is removed: None. */
+  private def writeDv(spark: SparkSession, path: String, m: Manifest,
+                      rows: DataFrame): Option[(String, Map[String, Long])] = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val name = java.util.UUID.randomUUID().toString.take(12) + ".dv"
+    val at = dvPath(path, name)
+    rows.select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
+      .write.parquet(at)
+    val perFile = spark.read.parquet(at).groupBy("f").agg(count(lit(1)))
+      .collect()
+    if (perFile.isEmpty) {
+      fsFor(spark, path).delete(new Path(at), true)
+      None
+    } else {
+      val resolve = entryResolver(m.files)
+      Some(name -> perFile.map(r => resolve(r.getString(0)) -> r.getLong(1)).toMap)
+    }
   }
 
   /** Up to `limit` distinct values of `colName` in `df`, or Nil when
@@ -5213,9 +5061,7 @@ object TxLog {
     require(partitionVals.nonEmpty,
       "TxLog.replacePartitions: name at least one partition value")
     val spark = df.sparkSession
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
     requireAppendable(m, path, "replacePartitions")
     val pcs = m.partitionCols
     require(pcs.nonEmpty,
@@ -5253,15 +5099,14 @@ object TxLog {
       s"TxLog.replacePartitions: df contains rows outside the named " +
         s"partitions (found ${pcs.mkString("/")}=${stray.headOption.orNull}); " +
         "either add that value to partitionVals or filter the frame")
-    val newFiles = stageIn(toPhysical(df, m.colMap), path, physPartCols(m), transformsOf(m))
+    val newFiles = stageRows(path, m, df)
     // interleaved appends into the REPLACED partitions conflict via the
     // readSet; appends elsewhere rebase, so the UNIQUE probe re-runs
     // against exactly those landed files (all outside the replace set)
     val cdc = captureCdc(spark, path, m, {
       val declared = StructType.fromDDL(m.schemaDdl)
       val replaced = m.files.filter(f => replaceDirs.contains(dirOf(f)))
-      readFiles(spark, path, declared, replaced, m.colMap, m.dv,
-          recoverPartitions = m.partitionSpec.isEmpty)
+      scanOf(spark, path, m, replaced)
         .select(declared.fieldNames.map(col).toIndexedSeq
           :+ lit("delete").as("_change_type"): _*)
         .unionByName(df.select(declared.fieldNames.map(col).toIndexedSeq
@@ -5310,44 +5155,26 @@ object TxLog {
   def deleteWhere(spark: SparkSession, path: String,
                   condition: org.apache.spark.sql.Column,
                   deletionVectors: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, not}
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    val m = head(spark, path)
     requireWritable(m, path)
     requireAppendable(m, path, "deleteWhere")
     val schema = StructType.fromDDL(m.schemaDdl)
     // null-safe: a NULL condition row is NOT deleted (SQL DELETE semantics)
     val hit = coalesce(condition, lit(false))
+    def deleted(rows: DataFrame): DataFrame =
+      rows.select(schema.fieldNames.map(col).toIndexedSeq
+        :+ lit("delete").as("_change_type"): _*)
     // declared merge-on-read: the table's own word turns DV mode on
     if (deletionVectors || dvDeclared(m)) {
       // rows to delete, keyed exactly as reads key them — existing DVs
-      // already filtered, so a row can never be deleted twice
-      val newDel = readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-        keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
-        .filter(hit)
-        .select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
-      // write FIRST, count from the written sidecar: one table-sized
-      // scan total, and the committed counts describe exactly the
-      // bytes on disk even under a non-deterministic condition
-      val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-      newDel.write.parquet(dvPath(path, dvName))
-      val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1))
-      if (perKey.isEmpty) {
-        fsFor(spark, path).delete(new Path(dvPath(path, dvName)), true)
-        return v
+      // already filtered, so a row can never be deleted twice; one
+      // table-sized scan total
+      val (dvName, counts) = writeDv(spark, path, m,
+          scanOf(spark, path, m, m.files, keepDvKey = true).filter(hit)) match {
+        case Some(dv) => dv
+        case None => return m.version
       }
-      // suffix keys → manifest entries (raw first, URL-decoded fallback)
-      val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-      val counts = perKey.map { case (suffix, n) =>
-        bySuffix.get(suffix)
-          .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-          .getOrElse(throw new IllegalStateException(
-            s"TxLog.deleteWhere(dv): scan key '$suffix' does not map back " +
-              "to any manifest entry")) -> n
-      }.toMap
       // BLIND appends never conflict a delete: the delete serializes
       // FIRST (its snapshot never contained the appended rows — the
       // Delta rule). The DV-targeted files must survive (dvLiveFor
@@ -5362,13 +5189,9 @@ object TxLog {
       // DV-targeted files
       val cdc = captureCdc(spark, path, m, {
         val sidecar = spark.read.parquet(dvPath(path, dvName))
-        val rows = readFiles(spark, path, schema, dvTargets.toSeq,
-          m.colMap, m.dv, keepDvKey = true,
-          recoverPartitions = m.partitionSpec.isEmpty)
-        rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
-            rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")
-          .select(schema.fieldNames.map(col).toIndexedSeq
-            :+ lit("delete").as("_change_type"): _*)
+        val rows = scanOf(spark, path, m, dvTargets, keepDvKey = true)
+        deleted(rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
+          rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi"))
       })
       commitRebase(spark, path, m, rewriteDirs = Set.empty, newFiles = Nil,
         schemaDdl = m.schemaDdl, batchId = None, readSet = None,
@@ -5376,36 +5199,22 @@ object TxLog {
         rebaseCheck = Some(predicateRebaseCheck(spark, path, schema,
           dvTargets, "UTC")), cdc = cdc)
     } else {
-      // exact hit-file discovery: the scan prunes to the condition's
-      // columns; the collected set is bounded by the live file count
-      // (_dv_key, not input_file_name — it survives the DV anti-join)
-      val uris = readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
-        .filter(hit).select(col("_dv_key").as("_f"))
-        .distinct().collect().map(_.getString(0))
-      if (uris.isEmpty) return v
-      val resolve = entryResolver(m.files)
-      val hitFiles = uris.map(resolve).toSet
-      val newFiles = stageIn(
-        toPhysical(readFiles(spark, path, schema, hitFiles.toSeq, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
-          .filter(not(hit)), m.colMap),
-        path, physPartCols(m), transformsOf(m))
+      // the scan prunes to the condition's columns
+      val hits = hitFiles(spark, path, m, m.files)(_.filter(hit))
+      if (hits.isEmpty) return m.version
+      val newFiles = stageRows(path, m, scanOf(spark, path, m, hits).filter(not(hit)))
       // file-granular read declaration: the files this delete REWRITES
       // are load-bearing, a BLIND append serializes after the delete
       // (its rows were never in the delete's snapshot), a DV/removal on
       // an un-hit file cannot create matches — and files added by a
       // NON-blind commit conflict ([[predicateRebaseCheck]])
       val cdc = captureCdc(spark, path, m,
-        readFiles(spark, path, schema, hitFiles.toSeq, m.colMap, m.dv,
-            recoverPartitions = m.partitionSpec.isEmpty)
-          .filter(hit)
-          .select(schema.fieldNames.map(col).toIndexedSeq
-            :+ lit("delete").as("_change_type"): _*))
+        deleted(scanOf(spark, path, m, hits).filter(hit)))
       commitRebase(spark, path, m, rewriteDirs = Set.empty,
         newFiles = newFiles, schemaDdl = m.schemaDdl, batchId = None,
-        readSet = None, operation = "DELETE", removeFiles = hitFiles,
+        readSet = None, operation = "DELETE", removeFiles = hits,
         rebaseCheck = Some(predicateRebaseCheck(spark, path, schema,
-          hitFiles, "UTC")), cdc = cdc)
+          hits, "UTC")), cdc = cdc)
     }
   }
 
@@ -5434,9 +5243,7 @@ object TxLog {
     retryIdentityRace("replaceWhere") {
       import org.apache.spark.sql.functions.{coalesce, col, lit, not}
       val spark = df0.sparkSession
-      val v = currentVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"TxLog: no table at $path"))
-      val m = manifest(spark, path, v)
+      val m = head(spark, path)
       requireWritable(m, path)
       requireAppendable(m, path, "replaceWhere")
       val declared = StructType.fromDDL(m.schemaDdl)
@@ -5450,21 +5257,14 @@ object TxLog {
           "the predicate — an overwrite of a region must stay inside it")
       enforceConstraints(df, m.constraints, "replaceWhere")
       // hit-file discovery, the deleteWhere shape
-      val uris = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
-        .filter(hit).select(col("_dv_key").as("_f"))
-        .distinct().collect().map(_.getString(0))
-      val resolve = entryResolver(m.files)
-      val hitFiles = uris.map(resolve).toSet
+      val hits = hitFiles(spark, path, m, m.files)(_.filter(hit))
       // UNIQUE probe against the POST-replace state: untouched files
       // via the standard probe, hit files' SURVIVOR rows via one
       // bounded join (replaced-away keys must not block the backfill)
       enforceUniques(df, spark, path, declared,
-        m.files.filterNot(hitFiles.contains), m, "replaceWhere")
-      if (hitFiles.nonEmpty && m.uniques.nonEmpty) {
-        val survivorRows = readFiles(spark, path, declared,
-          hitFiles.toSeq, m.colMap, m.dv,
-          recoverPartitions = m.partitionSpec.isEmpty).filter(not(hit))
+        m.files.filterNot(hits.contains), m, "replaceWhere")
+      if (hits.nonEmpty && m.uniques.nonEmpty) {
+        val survivorRows = scanOf(spark, path, m, hits).filter(not(hit))
         m.uniques.foreach { case (name, cols) =>
           val collided = df.select(cols.map(col).toIndexedSeq: _*)
             .join(survivorRows.select(cols.map(col).toIndexedSeq: _*), cols)
@@ -5476,20 +5276,13 @@ object TxLog {
         }
       }
       val survivors =
-        if (hitFiles.isEmpty) Nil
-        else stageIn(
-          toPhysical(readFiles(spark, path, declared, hitFiles.toSeq,
-            m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
-            .filter(not(hit)), m.colMap),
-          path, physPartCols(m), transformsOf(m))
-      val incoming = stageIn(toPhysical(df, m.colMap), path,
-        physPartCols(m), transformsOf(m))
+        if (hits.isEmpty) Nil
+        else stageRows(path, m, scanOf(spark, path, m, hits).filter(not(hit)))
+      val incoming = stageRows(path, m, df)
       // write-time CDC: the replaced region's rows as deletes, the
       // incoming batch as inserts
       val cdc = captureCdc(spark, path, m,
-        readFiles(spark, path, declared, hitFiles.toSeq, m.colMap, m.dv,
-            recoverPartitions = m.partitionSpec.isEmpty)
-          .filter(hit)
+        scanOf(spark, path, m, hits).filter(hit)
           .select(declared.fieldNames.map(col).toIndexedSeq
             :+ lit("delete").as("_change_type"): _*)
           .unionByName(df.select(declared.fieldNames.map(col).toIndexedSeq
@@ -5497,9 +5290,9 @@ object TxLog {
       commitRebase(spark, path, m, rewriteDirs = Set.empty,
         newFiles = survivors ++ incoming, schemaDdl = m.schemaDdl,
         batchId = None, readSet = None, operation = "REPLACE WHERE",
-        removeFiles = hitFiles,
+        removeFiles = hits,
         rebaseCheck = Some(predicateRebaseCheck(spark, path, declared,
-          hitFiles, "UTC")),
+          hits, "UTC")),
         revalidate = uniqueRebaseProbe(df, spark, path, m, "replaceWhere"),
         idClaims = idClaims, cdc = cdc)
     }
@@ -5532,13 +5325,11 @@ object TxLog {
                   set: Seq[(String, String)],
                   condition: org.apache.spark.sql.Column,
                   deletionVectors: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, not, when}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(set.nonEmpty, "TxLog.updateWhere: empty SET list")
     require(set.map(_._1).distinct.size == set.size,
       s"TxLog.updateWhere: duplicate assignment in ${set.map(_._1).mkString(", ")}")
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
     requireWritable(m, path)
     requireAppendable(m, path, "updateWhere")
     val schema = StructType.fromDDL(m.schemaDdl)
@@ -5566,6 +5357,12 @@ object TxLog {
           case None => col(f.name)
         }
       }.toIndexedSeq: _*)
+    // write-time CDC: exact pre/postimages of the matched rows
+    def changeRows(pre: DataFrame, post: DataFrame): DataFrame =
+      pre.select(schema.fieldNames.map(col).toIndexedSeq
+          :+ lit("update_preimage").as("_change_type"): _*)
+        .unionByName(post.select(schema.fieldNames.map(col).toIndexedSeq
+          :+ lit("update_postimage").as("_change_type"): _*))
     if (deletionVectors || dvDeclared(m)) {
       // ONE materialization of the matched rows (keys + values): the
       // DV sidecar and the appended images must describe the SAME set
@@ -5573,81 +5370,48 @@ object TxLog {
         s"_tmp_update_${java.util.UUID.randomUUID().toString.take(12)}")
       val fs = fsFor(spark, path)
       try {
-        readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+        scanOf(spark, path, m, m.files, keepDvKey = true)
           .filter(hit).write.parquet(tmp.toString)
         val matched = spark.read.parquet(tmp.toString)
-        if (matched.isEmpty) return v
+        if (matched.isEmpty) return m.version
         val images = assigned(
           matched.select(schema.fieldNames.map(col).toIndexedSeq: _*),
           everyRowMatched = true)
         enforceConstraints(images, m.constraints, "updateWhere")
-        val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-        matched
-          .select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
-          .write.parquet(dvPath(path, dvName))
-        val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-        val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-        val counts = perKey.map { case (suffix, n) =>
-          bySuffix.get(suffix)
-            .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-            .getOrElse(throw new IllegalStateException(
-              s"TxLog.updateWhere(dv): scan key '$suffix' does not map back " +
-                "to any manifest entry")) -> n
-        }.toMap
-        val staged = stageIn(toPhysical(images, m.colMap), path,
-          physPartCols(m), transformsOf(m))
+        val addDv = writeDv(spark, path, m, matched).toSeq
+        val staged = stageRows(path, m, images)
         // same read declaration as DELETE (DV): the update serializes
         // before any BLIND append; the DV targets are load-bearing and
         // non-blind adds conflict ([[predicateRebaseCheck]])
-        val dvTargets = counts.keySet
-        // write-time CDC from the ONE materialized matched set: exact
-        // pre/postimages, no key join, no condition re-evaluation
-        val cdc = captureCdc(spark, path, m,
-          matched.select(schema.fieldNames.map(col).toIndexedSeq
-              :+ lit("update_preimage").as("_change_type"): _*)
-            .unionByName(images.select(schema.fieldNames.map(col).toIndexedSeq
-              :+ lit("update_postimage").as("_change_type"): _*)))
+        val dvTargets = addDv.flatMap(_._2.keys).toSet
+        // CDC from the ONE materialized matched set: no key join, no
+        // condition re-evaluation
+        val cdc = captureCdc(spark, path, m, changeRows(matched, images))
         commitRebase(spark, path, m, rewriteDirs = Set.empty,
           newFiles = staged, schemaDdl = m.schemaDdl, batchId = None,
-          readSet = None, operation = "UPDATE (DV)",
-          addDv = Seq(dvName -> counts),
+          readSet = None, operation = "UPDATE (DV)", addDv = addDv,
           rebaseCheck = Some(predicateRebaseCheck(spark, path, schema,
             dvTargets, "UTC")), cdc = cdc)
       } finally fs.delete(tmp, true)
     } else {
       // exact hit-file discovery, identical to DELETE's
-      val uris = readFiles(spark, path, schema, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
-        .filter(hit).select(col("_dv_key").as("_f"))
-        .distinct().collect().map(_.getString(0))
-      if (uris.isEmpty) return v
-      val resolve = entryResolver(m.files)
-      val hitFiles = uris.map(resolve).toSet
-      val snap = readFiles(spark, path, schema, hitFiles.toSeq, m.colMap,
-        m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+      val hits = hitFiles(spark, path, m, m.files)(_.filter(hit))
+      if (hits.isEmpty) return m.version
+      val snap = scanOf(spark, path, m, hits)
       enforceConstraints(assigned(snap.filter(hit), everyRowMatched = true),
         m.constraints, "updateWhere")
-      val newFiles = stageIn(
-        toPhysical(assigned(snap, everyRowMatched = false), m.colMap),
-        path, physPartCols(m), transformsOf(m))
+      val newFiles = stageRows(path, m, assigned(snap, everyRowMatched = false))
       // file-granular read declaration, identical to DELETE's: blind
       // appends serialize after the update, hit files and non-blind
       // adds conflict ([[predicateRebaseCheck]])
       val matchedPre = snap.filter(hit)
-      val cdc = captureCdc(spark, path, m,
-        matchedPre.select(schema.fieldNames.map(col).toIndexedSeq
-            :+ lit("update_preimage").as("_change_type"): _*)
-          .unionByName(assigned(matchedPre, everyRowMatched = true)
-            .select(schema.fieldNames.map(col).toIndexedSeq
-              :+ lit("update_postimage").as("_change_type"): _*)))
+      val cdc = captureCdc(spark, path, m, changeRows(matchedPre,
+        assigned(matchedPre, everyRowMatched = true)))
       commitRebase(spark, path, m, rewriteDirs = Set.empty,
         newFiles = newFiles, schemaDdl = m.schemaDdl, batchId = None,
-        readSet = None, operation = "UPDATE", removeFiles = hitFiles,
+        readSet = None, operation = "UPDATE", removeFiles = hits,
         rebaseCheck = Some(predicateRebaseCheck(spark, path, schema,
-          hitFiles, "UTC")), cdc = cdc)
+          hits, "UTC")), cdc = cdc)
     }
   }
 
@@ -6163,27 +5927,25 @@ object TxLog {
 
   /** Apply a change feed produced by [[changes]] to ANOTHER table —
     * the consumer side of CDC: a replica ingests the row-level diff
-    * instead of re-reading the source. Inserts/updates merge (updates
-    * win on key collision), deletes drop their keys, and the whole
-    * feed lands as ONE atomic version with [[mergeInto]]'s economics:
-    * only partitions holding a changed or deleted key (old OR new
-    * location) rewrite; everything else carries by reference.
+    * instead of re-reading the source. It is one keyed merge
+    * ([[mergeWhenOnce]]) with the clause set `matched: DELETE when
+    * src._change_type = 'delete', UPDATE * when insert/update;
+    * notMatched: INSERT when insert/update` — so inserts/updates
+    * upsert, deletes drop their keys, and the whole feed lands as ONE
+    * atomic version with [[mergeInto]]'s economics: only the files
+    * holding a changed or deleted key (old OR new location) rewrite;
+    * everything else carries by reference.
     *
     * The feed must carry one row per key (what [[changes]] emits —
-    * guarded by the same bounded eager probe as the merge operators;
-    * `preValidated = true` skips it) with the table's full column set
-    * plus `_change_type`. Applying `changes(src, a, b)` to a replica
-    * of version a reproduces version b exactly (spec-pinned). */
+    * guarded by the merge engine's fused key probe; `preValidated =
+    * true` skips it) with the table's full column set plus
+    * `_change_type`. Applying `changes(src, a, b)` to a replica of
+    * version a reproduces version b exactly (spec-pinned). */
   def applyChanges(path: String, feed: DataFrame, keys: Seq[String],
                    preValidated: Boolean = false,
                    txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max, min}
-    val spark = feed.sparkSession
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
-    // per-app idempotency lane: a replayed feed window skips whole
-    if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) return v
+    import org.apache.spark.sql.functions.col
+    val m = head(feed.sparkSession, path)
     requireAppendable(m, path,
       "applyChanges (a CDC feed updates and deletes rows)")
     require(identityColumns(m).isEmpty,
@@ -6191,83 +5953,22 @@ object TxLog {
         s"${identityColumns(m).keys.mkString(", ")} — a CDC feed carries " +
         "explicit id values; a REPLICA of an identity table should not " +
         "re-declare IDENTITY (the source already allocated)")
-    val pcs = m.partitionCols
-    require(pcs.nonEmpty,
+    require(m.partitionCols.nonEmpty,
       "TxLog.applyChanges needs a partitioned table (create with partitionCol[s])")
-    val declared = StructType.fromDDL(m.schemaDdl)
+    val declared = StructType.fromDDL(m.schemaDdl).fieldNames.toSeq
     require(feed.columns.contains("_change_type"),
       "TxLog.applyChanges: feed must carry _change_type (see TxLog.changes)")
-    declared.fieldNames.foreach(c => require(feed.columns.contains(c),
+    declared.foreach(c => require(feed.columns.contains(c),
       s"TxLog.applyChanges: feed is missing table column '$c'"))
-    if (!preValidated) {
-      val dup = graft.operators.Upsert.pkViolations(feed, keys).limit(1).collect()
-      require(dup.isEmpty,
-        s"TxLog.applyChanges: duplicate feed rows for key (${keys.mkString(",")})")
-    }
-    val upserts = feed.filter(col("_change_type").isin("insert", "update"))
-      .select(declared.fieldNames.map(col): _*)
-    enforceConstraints(upserts, m.constraints, "applyChanges upserts")
-    enforceUniques(upserts, spark, path, declared, Nil, m,
-      "applyChanges upserts (within-batch)")
-    warnUncoveredUniques(m, keys, "applyChanges")
-    require(upserts.filter(pcs.map(col(_).isNull).reduce(_ || _))
-      .limit(1).collect().isEmpty,
-      s"TxLog.applyChanges: null ${pcs.mkString("/")} values are not supported")
-    val deletes = feed.filter(col("_change_type") === "delete")
-      .select(keys.map(col): _*)
-    // file-granular like [[mergeInto]]: the rewrite set is exactly the
-    // FILES currently holding a changed key (covers deletes and the
-    // old side of a moved key); upsert rows for keys the table lacks
-    // simply land as new files. One key-pruned semi-join scan.
-    val feedKeys = feed.select(keys.map(col): _*).distinct()
-    val hitUris = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-        keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
-      .select(keys.map(col) :+ col("_dv_key").as("_gf"): _*)
-      .join(feedKeys, keys, "left_semi")
-      .select("_gf").distinct().collect().map(_.getString(0))
-    val resolve = entryResolver(m.files)
-    val hitFiles = hitUris.map(resolve).toSet
-    if (hitFiles.isEmpty && upserts.limit(1).collect().isEmpty)
-      return sealNoopTxn(spark, path, m, txn, "APPLY CHANGES")
-    val hitRows = readFiles(spark, path, declared, hitFiles.toSeq, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
-    val merged = graft.operators.Upsert.mergeByKey(
-      hitRows.join(deletes, keys, "left_anti"), upserts, keys,
-      preValidated = true)
-    val newFiles = stageIn(toPhysical(merged, m.colMap), path, physPartCols(m), transformsOf(m))
-    // file-granular read declaration (see mergeRebaseCheck): the feed
-    // key bounds admit concurrently-added files outside the changed
-    // key range, so disjoint CDC lanes into one table don't serialize
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val keyBounds: Option[(String, String, String)] =
-      if (keys.size == 1 && m.statsCols.contains(physOf(m, keys.head))) {
-        val k = keys.head
-        val b = feed.agg(statsEncode(declared(k).dataType, min(col(k))),
-          statsEncode(declared(k).dataType, max(col(k)))).head()
-        if (b.isNullAt(0)) None else Some((k, b.getString(0), b.getString(1)))
-      } else None
-    // write-time CDC: the feed re-expressed as the EFFECT on this
-    // table (a feed "insert" for a key the replica already holds is an
-    // update here; a "delete" for an absent key is no event)
-    val cdc = captureCdc(spark, path, m, {
-      val oldMatched = hitRows.join(feedKeys, keys, "left_semi")
-      val oldKeys = oldMatched.select(keys.map(col): _*).distinct()
-      val upKeys = upserts.select(keys.map(col): _*).distinct()
-      def shaped(d: DataFrame, t: String) =
-        d.select(declared.fieldNames.map(col).toIndexedSeq
-          :+ lit(t).as("_change_type"): _*)
-      shaped(oldMatched.join(deletes, keys, "left_semi"), "delete")
-        .unionByName(shaped(oldMatched.join(upKeys, keys, "left_semi"),
-          "update_preimage"))
-        .unionByName(shaped(upserts.join(oldKeys, keys, "left_semi"),
-          "update_postimage"))
-        .unionByName(shaped(upserts.join(oldKeys, keys, "left_anti"),
-          "insert"))
-    })
-    commitRebase(spark, path, m, rewriteDirs = Set.empty,
-      newFiles = newFiles, schemaDdl = m.schemaDdl, batchId = None,
-      readSet = None, operation = "APPLY CHANGES", removeFiles = hitFiles,
-      txn = txn, rebaseCheck = Some(mergeRebaseCheck(declared, keyBounds,
-        sourceEmpty = false, m.files.toSet, hitFiles, tz)), cdc = cdc)
+    val upsert = Some("src._change_type IN ('insert', 'update')")
+    mergeWhenOnce(m, path, feed.select((declared :+ "_change_type").map(col): _*),
+      keys,
+      matched = Seq(MergeClause(Some("src._change_type = 'delete'"), "delete"),
+        MergeClause(upsert, "update", setAll(declared))),
+      notMatched = Seq(MergeClause(upsert, "insert")), notMatchedBySource = Nil,
+      deletionVectors = false, txn, evolveSchema = false,
+      MergeCaller("applyChanges", "APPLY CHANGES", "feed", wholeRow = true,
+        preValidated))
   }
 
   /** [[applyChanges]]' KEYLESS sibling — the consumer for the
@@ -6298,9 +5999,8 @@ object TxLog {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val spark = feed.sparkSession
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
+    val v = m.version
     if (txn.exists { case (a, tv) => m.txns.get(a).exists(_ >= tv) }) return v
     requireAppendable(m, path,
       "applyChangeEvents (a CDC event feed deletes rows)")
@@ -6340,55 +6040,36 @@ object TxLog {
       return sealNoopTxn(spark, path, m, txn, "APPLY CHANGES (KEYLESS)")
     // match removals to concrete LIVE occurrences, first-N per row in
     // (file, position) order
-    val withPos = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-      keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+    val withPos = scanOf(spark, path, m, m.files, keepDvKey = true)
     val cond = cols.map(c => withPos(c) <=> col(s"_r_$c")).reduce(_ && _)
     val ow = Window.partitionBy(cols.map(c => col(s"_r_$c")): _*)
       .orderBy(col("_dv_key"), col("_dv_idx"))
     val picked = withPos.join(removals, cond, "inner")
       .withColumn("_rn", row_number().over(ow))
       .filter(col("_rn") <= col("_need"))
-      .select(col("_dv_key").as("f"),
-        col("_dv_idx").cast("long").as("row_index"))
-    val (addDv, cdcDeleteSrc) =
-      if (needTotal == 0L) (Nil: Seq[(String, Map[String, Long])], None)
+    val addDv: Seq[(String, Map[String, Long])] =
+      if (needTotal == 0L) Nil
       else {
-        // write FIRST, count from the written sidecar (the deleteWhere
-        // pattern: committed counts describe exactly the bytes on disk)
-        val dvName = java.util.UUID.randomUUID().toString.take(12) + ".dv"
-        picked.write.parquet(dvPath(path, dvName))
-        val perKey = spark.read.parquet(dvPath(path, dvName)).groupBy("f")
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-        val pickedTotal = perKey.map(_._2).sum
+        val dv = writeDv(spark, path, m, picked)
+        val pickedTotal = dv.map(_._2.values.sum).getOrElse(0L)
         require(pickedTotal == needTotal, {
-          fsFor(spark, path).delete(new Path(dvPath(path, dvName)), true)
+          dv.foreach(d => fsFor(spark, path).delete(new Path(dvPath(path, d._1)), true))
           s"TxLog.applyChangeEvents: the feed deletes $needTotal row " +
             s"occurrence(s) but the replica holds only $pickedTotal " +
             "matching live row(s) — the replica has drifted from the " +
             "feed's source; refuse loudly rather than skip events"
         })
-        val bySuffix = m.files.map(f => relEntry(f) -> f).toMap
-        val counts = perKey.map { case (suffix, n) =>
-          bySuffix.get(suffix)
-            .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
-            .getOrElse(throw new IllegalStateException(
-              s"TxLog.applyChangeEvents: scan key '$suffix' does not map " +
-                "back to any manifest entry")) -> n
-        }.toMap
-        (Seq(dvName -> counts), Some(dvName))
+        dv.toSeq
       }
     val newFiles =
       if (!haveAdds) Nil
-      else stageIn(toPhysical(addRows, m.colMap), path, physPartCols(m),
-        transformsOf(m))
+      else stageRows(path, m, addRows)
     // write-time CDC for the replica's own downstream: adds as
     // inserts, the written sidecar's positions joined back as deletes
     val cdc = captureCdc(spark, path, m, {
-      val dels = cdcDeleteSrc.map { dvName =>
+      val dels = addDv.headOption.map { case (dvName, _) =>
         val sidecar = spark.read.parquet(dvPath(path, dvName))
-        val rows = readFiles(spark, path, declared, m.files, m.colMap, m.dv,
-          keepDvKey = true, recoverPartitions = m.partitionSpec.isEmpty)
+        val rows = scanOf(spark, path, m, m.files, keepDvKey = true)
         rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
             rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")
           .select(cols.map(col).toIndexedSeq
@@ -6905,9 +6586,8 @@ object TxLog {
     * counts, and the declared schema. Metadata + file stats only; no
     * data is read. */
   def detail(spark: SparkSession, path: String): DataFrame = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
+    val v = m.version
     def sizeOf(f: String): Long = {
       val p = if (isAbsEntry(f)) new Path(f) else new Path(dataDir(path), f)
       try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -7257,9 +6937,7 @@ object TxLog {
     * sidecars written. */
   def buildBloomIndex(spark: SparkSession, path: String, colName: String,
                       fpp: Double = 0.01): Int = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"TxLog: no table at $path"))
-    val m = manifest(spark, path, v)
+    val m = head(spark, path)
     val schema = StructType.fromDDL(m.schemaDdl)
     require(schema.fieldNames.contains(colName),
       s"TxLog.buildBloomIndex: no column '$colName' in ${m.schemaDdl}")
@@ -7292,7 +6970,7 @@ object TxLog {
           s"TxLog.buildBloomIndex: scan file '$uri' does not map back " +
             "to any manifest entry — partition value encoding mismatch"))
     }
-    val hashed = readFiles(spark, path, schema, missing, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    val hashed = scanOf(spark, path, m, missing)
       .select(input_file_name().as("_f"),
         xxhash64(col(colName).cast("string")).as("_h"))
     // filter sizing: the manifest's per-commit row counts cover most
@@ -7376,7 +7054,7 @@ object TxLog {
     val m = manifest(spark, path, v)
     val files = prunedFilesByKey(spark, path, colName, value, Some(v))
     import org.apache.spark.sql.functions.{col, lit}
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+    scanOf(spark, path, m, files)
       .filter(col(colName) === lit(value))
   }
 }

@@ -250,7 +250,6 @@ object Probe {
     // per-JOB attribution inside one lifecycle verb: which Spark jobs
     // (and how much non-job driver time) a create/merge/delete pays
     import graft.storage.TxLog
-    spark.conf.set("graft.txlog.trace", "true")
     // A/B: pass "ow" as an extra arg to test the optimized-write lane
     if (args.contains("ow"))
       spark.conf.set("graft.txlog.optimizedWrite", "true")

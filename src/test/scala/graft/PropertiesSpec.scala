@@ -162,30 +162,52 @@ class PropertiesSpec extends SparkSpec {
   test("property: TxLog.mergeInto == mergeByKey semantics for arbitrary update feeds") {
     // whatever the keys/partitions, the transactional merge's latest
     // snapshot equals the in-memory reference semantics (updates win,
-    // moved keys leave no stale row), and v1 stays the original table
+    // moved keys leave no stale row), and v1 stays the original table —
+    // through the rewrite and DV forms of mergeInto and through
+    // applyChanges (the same feed typed 'update', then with a subset of
+    // keys typed 'delete')
+    import graft.storage.TxLog
     val tableGen = for {
       base <- Gen.nonEmptyListOf(Gen.zip(
         Gen.choose(0L, 30L), Gen.choose(0, 3), Gen.choose(-100, 100)))
       upd <- Gen.nonEmptyListOf(Gen.zip(
         Gen.choose(0L, 35L), Gen.choose(0, 3), Gen.choose(-100, 100)))
+      dels <- Gen.someOf(base.map(_._1) ++ upd.map(_._1))
     } yield (base.map(t => (t._1, s"p${t._2}", t._3.toDouble)).distinctBy(_._1),
-             upd.map(t => (t._1, s"p${t._2}", t._3.toDouble)).distinctBy(_._1))
-    forAll(tableGen, n = 5) { case (base, upd) =>
+             upd.map(t => (t._1, s"p${t._2}", t._3.toDouble)).distinctBy(_._1),
+             dels.toSet)
+    forAll(tableGen, n = 5) { case (base, upd, dels) =>
       import spark.implicits._
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_txlog_prop").toString + "/tbl"
       val baseDf = base.toDF("k", "part", "v")
       val updDf = upd.toDF("k", "part", "v")
-      graft.storage.TxLog.create(baseDf, path, Some("part"))
-      graft.storage.TxLog.mergeInto(path, updDf, Seq("k"))
-      val got = graft.storage.TxLog.read(spark, path)
-        .as[(Long, String, Double)].collect().toSet
+      def snapshot(path: String, version: Option[Long] = None) =
+        TxLog.read(spark, path, version).as[(Long, String, Double)].collect().toSet
+      def merged(verb: String, want: Set[(Long, String, Double)])(
+          merge: String => Long): Unit = {
+        val path = java.nio.file.Files
+          .createTempDirectory("graft_txlog_prop").toString + "/tbl"
+        TxLog.create(baseDf, path, Some("part"))
+        merge(path)
+        val got = snapshot(path)
+        assert(got == want, s"$verb diverged:\n got=$got\nwant=$want")
+        assert(snapshot(path, Some(1L)) == base.toSet, s"$verb: v1 snapshot drifted")
+      }
       val want = graft.operators.Upsert.mergeByKey(baseDf, updDf, Seq("k"))
         .as[(Long, String, Double)].collect().toSet
-      assert(got == want, s"merge diverged:\n got=$got\nwant=$want")
-      val v1 = graft.storage.TxLog.read(spark, path, Some(1L))
-        .as[(Long, String, Double)].collect().toSet
-      assert(v1 == base.toSet, "v1 snapshot drifted")
+      merged("mergeInto", want)(TxLog.mergeInto(_, updDf, Seq("k")))
+      merged("mergeInto(dv)", want)(
+        TxLog.mergeInto(_, updDf, Seq("k"), deletionVectors = true))
+      merged("applyChanges", want)(TxLog.applyChanges(_,
+        updDf.withColumn("_change_type", lit("update")), Seq("k")))
+      // deleted keys: a feed row typed 'delete' (its other columns are
+      // ignored), every other update row still typed 'update'
+      val kept = upd.filterNot(u => dels(u._1))
+      val wantDel = graft.operators.Upsert.mergeByKey(baseDf, kept.toDF("k", "part", "v"), Seq("k"))
+        .as[(Long, String, Double)].collect().toSet.filterNot(r => dels(r._1))
+      val feed = (kept.map { case (k, p, v) => (k, p, v, "update") } ++
+        dels.toSeq.map(k => (k, "p0", 0.0, "delete")))
+        .toDF("k", "part", "v", "_change_type")
+      merged("applyChanges(delete)", wantDel)(TxLog.applyChanges(_, feed, Seq("k")))
     }
   }
 

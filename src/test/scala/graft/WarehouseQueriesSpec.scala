@@ -165,36 +165,6 @@ class WarehouseQueriesSpec extends SparkSpec {
     val merged = graft.operators.Upsert.mergeByKey(existing, updates, Seq("k"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(merged == Map(1L -> "a", 2L -> "B", 3L -> "c"))
-    val (parts, scoped) = graft.operators.Upsert.mergePartitioned(existing, updates, Seq("k"), "p")
-    assert(parts == Seq(1))
-    assert(scoped.select("k").as[Long].collect().toSet == Set(1L, 2L))
-  }
-
-  test("mergeInto rewrites only touched partitions; moved keys leave no stale row") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString + "/tbl"
-    Seq((1L, "a", 1), (2L, "b", 1), (3L, "c", 2), (4L, "d", 3))
-      .toDF("k", "v", "p").write.partitionBy("p").parquet(dir)
-    def partitionBytes(p: Int): Map[String, Int] = {
-      val d = new java.io.File(s"$dir/p=$p")
-      d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-        f.getName -> java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f.toPath))
-      }.toMap
-    }
-    val untouchedBefore = partitionBytes(3)
-    // k=2 updated in place in p=1; k=3 MOVES p=2 -> p=1
-    val updates = Seq((2L, "B", 1), (3L, "C", 1)).toDF("k", "v", "p")
-    val parts = graft.operators.Upsert.mergeInto(dir, updates, Seq("k"), "p")
-    // rewrite set includes the moved key's OLD partition (p=2)
-    assert(parts.map(_.toString).toSet == Set("1", "2"), s"rewrite set was $parts")
-    val rows = spark.read.parquet(dir).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getAs[Number]("p").intValue())).toSet
-    assert(rows == Set((1L, "a", 1), (2L, "B", 1), (3L, "C", 1), (4L, "d", 3)),
-      s"merged table was $rows")
-    // dynamic overwrite left the untouched partition's files byte-identical
-    assert(partitionBytes(3) == untouchedBefore, "untouched partition was rewritten")
-    // the partition the moved key vacated is gone entirely, not stale
-    assert(!new java.io.File(s"$dir/p=2").exists(), "emptied partition dir survived")
   }
 
   test("scdType2: closes changed versions, no-ops identical changes, opens new keys, keeps history") {
