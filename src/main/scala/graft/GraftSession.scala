@@ -2,16 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned local SparkSession factory used by specs and ad-hoc runs.
+/** Tuned local SparkSession factory used by specs, [[Bench]] and
+  * ad-hoc runs.
   *
   * The settings mirror what we'd ship on a real cluster: AQE on (runtime
   * re-planning, skew-join splitting, partition coalescing), shuffle
   * parallelism matched to cores instead of the 200 default, UTC session
-  * time zone for oracle parity.
+  * time zone for oracle parity. `SPARK_GRAFT_CPUS` sets the local core
+  * count (default: the host's available processors).
   */
 object GraftSession {
   def get(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")

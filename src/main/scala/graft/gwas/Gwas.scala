@@ -156,11 +156,15 @@ object GwasOps {
     * broadcast; b37 is marker-sized → shuffle join on kgp_id (bucketed
     * by kgp_id at scale, this is co-located). The reduced study join
     * carries `ancestry` so app.R's `facet_grid(ancestry ~ name)` option
-    * (app.R:56-60,185-189) is answerable from the view. */
+    * (app.R:56-60,185-189) is answerable from the view. A fact that
+    * already carries `chr` ([[writePartitioned]]'s layout, the same
+    * value b37 holds) keeps its own: b37 joins without `chr`, so a
+    * region filter on `chr` prunes the fact's chr partitions. */
   def combinedView(gwas: DataFrame, b37: DataFrame, study: DataFrame): DataFrame =
     gwas
       .filter(col("impute_score") >= 0.3)
-      .join(b37, Seq("kgp_id"), "left")
+      .join(if (gwas.columns.contains("chr")) b37.drop("chr") else b37,
+        Seq("kgp_id"), "left")
       .join(
         broadcast(study.select(
           col("id").as("study_id"), col("name"), col("ancestry"), col("n"),

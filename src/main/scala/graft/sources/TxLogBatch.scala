@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Predicate}
@@ -10,18 +10,20 @@ import org.apache.spark.sql.types.{NumericType, StructType}
 
 import graft.storage.TxLog
 
-/** The BATCH read path for `spark.read.format("graft-txlog")` — the
-  * Delta pattern: a plain `BaseRelation` backed by [[TxLogFileIndex]],
-  * a manifest-driven `FileIndex`, wrapped in Spark's own
-  * `HadoopFsRelation` + `ParquetFileFormat`. Everything downstream is
-  * stock Spark: vectorized parquet, whole-stage codegen, filter and
-  * column pushdown — the index only answers "which files", exactly
-  * like Delta's TahoeFileIndex.
+/** The one snapshot scan path of a TxLog table — the Delta pattern:
+  * a manifest-driven `FileIndex` wrapped in Spark's own
+  * `HadoopFsRelation` + `ParquetFileFormat`, mounted by
+  * `spark.read.format("graft-txlog")`, [[TxLog.read]] and every
+  * verb's internal scan alike ([[TxLogBatch.scan]]). Everything
+  * downstream is stock Spark: vectorized parquet, whole-stage codegen,
+  * filter and column pushdown — the index only answers "which files",
+  * exactly like Delta's TahoeFileIndex.
   *
   * What the index adds over a directory listing:
   *  - the file list IS the resolved manifest (snapshot isolation and
   *    `versionAsOf`/`timestampAsOf` time travel for free — no
-  *    directory scan, no eventual-consistency caveats);
+  *    directory scan, no eventual-consistency caveats), or the file
+  *    subset a verb scans;
   *  - PARTITION pruning evaluates the scan's partition filters
   *    against each manifest partition directory's typed values —
   *    driver-side, partition-count bounded;
@@ -32,11 +34,23 @@ import graft.storage.TxLog
   *    without stats are conservatively kept — pruning is an
   *    optimization, never a filter (the exact predicate still runs on
   *    the scan).
+  *
+  * `full` marks a whole version's snapshot: only it may plan through
+  * the version's checkpoint (distributed listing, `sizeInBytes`),
+  * which enumerates every file of the version. Equality is (table,
+  * version, scanned files), so two scans of one snapshot in one plan
+  * stay reuse-equal.
   */
-class TxLogFileIndex(spark: SparkSession,
-                     private[graft] val tablePath: String,
-                     private[graft] val m: TxLog.Manifest) extends FileIndex {
+class TxLogFileIndex private[graft] (spark: SparkSession,
+                                     private[graft] val tablePath: String,
+                                     private[graft] val m: TxLog.Manifest,
+                                     private[graft] val full: Boolean)
+    extends FileIndex {
   import TxLogFileIndex.{admitsNull, admitsTagged, dirPartOfEntry, partitionValuesOf}
+
+  /** The whole snapshot of `m`'s version. */
+  def this(spark: SparkSession, tablePath: String, m: TxLog.Manifest) =
+    this(spark, tablePath, m, full = true)
 
   private val declared = StructType.fromDDL(m.schemaDdl)
   private val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
@@ -56,7 +70,7 @@ class TxLogFileIndex(spark: SparkSession,
     * data filter and prunes through the transform translation. */
   override val partitionSchema: StructType =
     if (m.partitionSpec.nonEmpty) new StructType()
-    else StructType(m.partitionCols.map(declared.apply))
+    else StructType(m.partitionCols.map(declared(_).copy(nullable = true)))
   /** Physical name per partition field, aligned to [[partitionSchema]]. */
   private val physPartNames: Seq[String] =
     partitionSchema.map(f => physName(f.name)).toSeq
@@ -81,7 +95,7 @@ class TxLogFileIndex(spark: SparkSession,
     * every later planning) covers versions between interval
     * checkpoints. A failed write degrades to the driver walk. */
   private lazy val distributed: Boolean =
-    m.files.size >= distributedThreshold &&
+    full && m.files.size >= distributedThreshold &&
       TxLog.ensureCheckpoint(spark, tablePath, m)
 
   /** One FileStatus per manifest entry — resolved once at first
@@ -99,7 +113,8 @@ class TxLogFileIndex(spark: SparkSession,
 
   /** Partition-dir string → typed InternalRow of the partition values
     * (unescaped, `__HIVE_DEFAULT_PARTITION__` → null, cast via the
-    * declared schema exactly like [[TxLog.read]]'s contract). */
+    * declared schema) — the one place a scan recovers partition
+    * columns, for the format door and [[TxLog.read]] alike. */
   private def valuesOf(dir: String): InternalRow =
     partitionValuesOf(dir, partitionSchema, physPartNames, sessionTz)
 
@@ -371,6 +386,14 @@ class TxLogFileIndex(spark: SparkSession,
         .agg(sum(coalesce(col("len"), lit(0L)))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     } else statuses.map(_._2.getLen).sum
+
+  override def equals(other: Any): Boolean = other match {
+    case o: TxLogFileIndex =>
+      o.tablePath == tablePath && o.m.version == m.version && o.m.files == m.files
+    case _ => false
+  }
+  private lazy val hash = (tablePath, m.version, m.files).hashCode()
+  override def hashCode(): Int = hash
 }
 
 object TxLogFileIndex {
@@ -390,9 +413,9 @@ object TxLogFileIndex {
 
   /** Partition-dir string → typed InternalRow of the partition values
     * (unescaped, `__HIVE_DEFAULT_PARTITION__` → null, cast via the
-    * declared schema in the SESSION tz exactly like [[TxLog.read]]'s
-    * contract — stageIn's writer formats timestamp partition values in
-    * the session timezone, so a UTC cast-back would shift instants).
+    * declared schema in the SESSION tz — stageIn's writer formats
+    * timestamp partition values in the session timezone, so a UTC
+    * cast-back would shift instants).
     * `physNames` is the physical name per partition field (the
     * directories spell physical names — renames never move files). */
   private[sources] def partitionValuesOf(dir: String, partitionSchema: StructType,
@@ -478,10 +501,10 @@ object TxLogFileIndex {
   * relation goes back to columnar.
   *
   * The DV map (file-key → sorted deleted row indexes) is
-  * DELETE-SIZED, loaded once driver-side and broadcast — the same
-  * budget TxLog.read's anti-join already spends, minus the join
-  * (above [[TxLogBatch.dvBroadcastMaxRows]] the relation falls back
-  * to the anti-join seam instead; see [[TxLogJoinRelation]]). */
+  * DELETE-SIZED, loaded once driver-side and broadcast (above
+  * [[TxLogBatch.dvBroadcastMaxRows]] the scan mounts this format
+  * without DVs and anti-joins the sidecars instead; see
+  * [[TxLogBatch.scan]]). */
 class TxLogParquetFileFormat(
     val tablePath: String,
     val colMap: Seq[(String, String)],
@@ -615,17 +638,91 @@ class TxLogParquetFileFormat(
 }
 
 object TxLogBatch {
-  /** Driver-side load of a snapshot's deletion vectors into
-    * (file-key → SORTED deleted row indexes) — delete-sized, the same
-    * rows [[TxLog.read]]'s anti-join streams, collected once and
-    * broadcast so every scan task probes a local array. Callers gate
-    * on [[dvBroadcastMaxRows]] BEFORE invoking (the manifest's
-    * per-entry counts price the collect without reading a byte);
-    * over-budget snapshots mount through [[TxLogJoinRelation]]. */
+  /** The one `HadoopFsRelation` over a TxLog snapshot, or over the
+    * file subset `m` carries. `dvInFormat = false` leaves deletion
+    * vectors to the caller ([[scan]]'s over-budget anti-join). */
+  private def fsRelation(spark: SparkSession, path: String, m: TxLog.Manifest,
+                         full: Boolean, dvInFormat: Boolean,
+                         options: Map[String, String])
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
+    val index = new TxLogFileIndex(spark, path, m, full)
+    val dv = if (dvInFormat) m.dv else Nil
+    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      index,
+      partitionSchema = index.partitionSchema,
+      // nullable like every Spark file source's: a column added by
+      // schema evolution reads null from older files
+      dataSchema = StructType(StructType.fromDDL(m.schemaDdl)
+        .filterNot(f => index.partitionSchema.fieldNames.contains(f.name))
+        .map(_.copy(nullable = true))),
+      // bucket(n, c) hidden layouts mount as REAL bucketed relations:
+      // joins/aggs on c plan shuffle-free (see bucketSpecOf)
+      bucketSpec = bucketSpecOf(m),
+      // DV-bearing or column-mapped snapshots read through the
+      // manifest-aware format (DV rows filtered per file at scan time;
+      // logical→physical rename translation on schemas and pushed
+      // filters); plain snapshots keep the stock columnar parquet path
+      fileFormat =
+        if (dv.isEmpty && m.colMap.isEmpty)
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        else new TxLogParquetFileFormat(path, m.colMap, dv.map(_._1),
+          dvBroadcastFor(spark, path, m.copy(dv = dv))),
+      options = options)(spark)
+  }
+
+  /** The format door's relation over snapshot `m`; a snapshot whose DV
+    * rows exceed [[dvBroadcastMaxRows]] (priced from manifest counts,
+    * zero I/O) mounts [[TxLogJoinRelation]] instead. */
+  def relation(spark: SparkSession, path: String, m: TxLog.Manifest,
+               options: Map[String, String])
+      : org.apache.spark.sql.sources.BaseRelation =
+    if (dvRowCount(m) > dvBroadcastMaxRows(spark)) new TxLogJoinRelation(spark, path, m)
+    else fsRelation(spark, path, m, full = true, dvInFormat = true, options)
+
+  /** The live rows of `files` in snapshot `m`, in the DECLARED column
+    * order with LOGICAL names. Under the DV budget the format drops
+    * deleted rows per file; above it the scan anti-joins the DV
+    * sidecars on (file key, row index) — distributed, no driver
+    * collect. `keepDvKey` appends `_dv_key` (the data-root-relative
+    * file suffix DV sidecars store) and `_dv_idx` (the row's index
+    * within its file). */
+  private[graft] def scan(spark: SparkSession, path: String, m: TxLog.Manifest,
+                          files: Seq[String], keepDvKey: Boolean = false)
+      : DataFrame = {
+    val full = files.size == m.files.size && files.toSet == m.files.toSet
+    val sm =
+      if (full) m
+      else m.copy(files = files, dv = TxLog.dvLiveFor(m.dv, files.toSet))
+    val antiJoin = dvRowCount(sm) > dvBroadcastMaxRows(spark)
+    val mounted = spark.baseRelationToDataFrame(
+      fsRelation(spark, path, sm, full, dvInFormat = !antiJoin, Map.empty))
+    val keyed =
+      if (!keepDvKey && !antiJoin) mounted
+      else mounted
+        // the same file key the DV writer computed: data-root-relative
+        // suffix (identical for relative entries and clone refs)
+        .withColumn("_dv_key", F.expr("substring_index(input_file_name(), '/data/', -1)"))
+        .withColumn("_dv_idx", F.col("_metadata.row_index"))
+    val live =
+      if (!antiJoin) keyed
+      else keyed.join(
+        TxLog.dvRows(spark, path, sm.dv.map(_._1))
+          .select(F.col("f").as("_dv_key"), F.col("row_index").as("_dv_idx")),
+        Seq("_dv_key", "_dv_idx"), "left_anti")
+    val declared = StructType.fromDDL(m.schemaDdl).fieldNames.toSeq
+    live.select((declared.map(n => F.col("`" + n.replace("`", "``") + "`")) ++
+      (if (keepDvKey) Seq(F.col("_dv_key"), F.col("_dv_idx")) else Nil)): _*)
+  }
+
+  /** Driver-side load of deletion vectors into (file-key → SORTED
+    * deleted row indexes) — delete-sized, collected once and broadcast
+    * so every scan task probes a local array. Callers gate on
+    * [[dvBroadcastMaxRows]] BEFORE invoking (the manifest's per-entry
+    * counts price the collect without reading a byte); over-budget
+    * snapshots scan through [[scan]]'s anti-join. */
   def loadDvMap(spark: SparkSession, tablePath: String,
                 m: TxLog.Manifest): Map[String, Array[Long]] =
-    spark.read
-      .parquet(m.dv.map { case (f, _) => TxLog.dvPath(tablePath, f) }: _*)
+    TxLog.dvRows(spark, tablePath, m.dv.map(_._1))
       .select("f", "row_index").collect()
       .groupBy(_.getString(0))
       .map { case (k, rows) =>
@@ -647,10 +744,12 @@ object TxLogBatch {
   def dvRowCount(m: TxLog.Manifest): Long =
     m.dv.iterator.map(_._2.valuesIterator.sum).sum
 
-  /** Per-snapshot DV broadcast cache: repeated `.load()`s of the same
-    * (table, version) reuse ONE broadcast instead of leaking one per
-    * mount — a BI tool re-resolving per query would otherwise grow
-    * driver memory for the session's lifetime. Evicted entries
+  /** DV broadcast cache: repeated mounts under the same deletion
+    * vectors reuse ONE broadcast instead of leaking one per mount — a
+    * BI tool re-resolving per query would otherwise grow driver memory
+    * for the session's lifetime. Keyed by the DV file names, not the
+    * version: sidecars are immutable, so later versions carrying the
+    * same ones reuse the map without another collect. Evicted entries
     * unpersist lazily (a straggler query still holding the handle
     * refetches from the driver — an efficiency event, never a
     * correctness one). */
@@ -668,7 +767,7 @@ object TxLogBatch {
   def dvBroadcastFor(spark: SparkSession, tablePath: String, m: TxLog.Manifest)
       : org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]] =
     dvBcastCache.synchronized {
-      val key = s"${spark.sparkContext.applicationId}|$tablePath|${m.version}|" +
+      val key = s"${spark.sparkContext.applicationId}|$tablePath|" +
         m.dv.map(_._1).mkString(",")
       val cached = dvBcastCache.get(key)
       if (cached != null) cached
@@ -800,9 +899,9 @@ object TxLogBatch {
   }
 }
 
-/** Fallback mount for snapshots whose deletion vectors exceed
-  * [[TxLogBatch.dvBroadcastMaxRows]]: serves through [[TxLog.read]]'s
-  * DISTRIBUTED anti-join seam instead of a driver-collected broadcast
+/** The format door's mount for snapshots whose deletion vectors
+  * exceed [[TxLogBatch.dvBroadcastMaxRows]]: serves [[TxLogBatch.scan]],
+  * whose DISTRIBUTED anti-join replaces the driver-collected broadcast
   * map, so a huge MERGE-ON-READ delete never OOMs the driver at mount
   * time. Column pruning and every translatable filter still reach the
   * underlying parquet scan through the inner DataFrame's own planner;
@@ -850,7 +949,7 @@ class TxLogJoinRelation(spark: SparkSession,
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[sources.Filter])
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val base = TxLog.read(spark, path, Some(m.version))
+    val base = TxLogBatch.scan(spark, path, m, m.files)
     val filtered = filters.flatMap(translate)
       .foldLeft(base)((df, c) => df.filter(c))
     // empty requiredColumns (count-style scans) → zero-column rows

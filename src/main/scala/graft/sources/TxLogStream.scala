@@ -81,11 +81,12 @@ class TxLogStream extends StreamSourceProvider with StreamSinkProvider
     *
     * and `CREATE TABLE t USING graft-txlog OPTIONS (path '...')` for
     * BI tools and notebooks that speak SQL, not the Scala API. The
-    * relation is Spark's own `HadoopFsRelation` over
-    * [[TxLogFileIndex]] — vectorized parquet, codegen, filter/column
-    * pushdown all stock; the index contributes the manifest file list
-    * (snapshot isolation + time travel), partition pruning, and
-    * min/max data skipping. */
+    * relation is [[TxLogBatch.relation]] — Spark's own
+    * `HadoopFsRelation` over [[TxLogFileIndex]], the same mount
+    * [[TxLog.read]] scans through: vectorized parquet, codegen,
+    * filter/column pushdown all stock; the index contributes the
+    * manifest file list (snapshot isolation + time travel), partition
+    * pruning, and min/max data skipping. */
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String])
       : org.apache.spark.sql.sources.BaseRelation = {
@@ -101,38 +102,7 @@ class TxLogStream extends StreamSourceProvider with StreamSinkProvider
       return TxLogBatch.cdfRelation(spark, pLower)
     }
     val (path, m) = TxLogBatch.resolve(spark, parameters)
-    // a huge-delete snapshot (DV rows above the broadcast budget —
-    // priced from manifest counts, zero I/O) mounts through the
-    // distributed anti-join seam instead of a driver-side collect
-    if (TxLogBatch.dvRowCount(m) > TxLogBatch.dvBroadcastMaxRows(spark))
-      return new TxLogJoinRelation(spark, path, m)
-    val declared = StructType.fromDDL(m.schemaDdl)
-    // HIDDEN layouts surface no partition columns: the dirs spell
-    // derived transform values, the raw data is complete in the files,
-    // and pruning rides the index's transform translation
-    val partitionSchema =
-      if (m.partitionSpec.nonEmpty) new StructType()
-      else StructType(m.partitionCols.map(declared.apply))
-    val dataSchema =
-      if (m.partitionSpec.nonEmpty) declared
-      else StructType(declared.filterNot(f => m.partitionCols.contains(f.name)))
-    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      new TxLogFileIndex(spark, path, m),
-      partitionSchema = partitionSchema,
-      dataSchema = dataSchema,
-      // bucket(n, c) hidden layouts mount as REAL bucketed relations:
-      // joins/aggs on c plan shuffle-free (see TxLogBatch.bucketSpecOf)
-      bucketSpec = TxLogBatch.bucketSpecOf(m),
-      // DV-bearing or column-mapped snapshots read through the
-      // manifest-aware format (DV rows filtered per file at scan time;
-      // logical→physical rename translation on schemas and pushed
-      // filters); plain snapshots keep the stock columnar parquet path
-      fileFormat =
-        if (m.dv.isEmpty && m.colMap.isEmpty)
-          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-        else new TxLogParquetFileFormat(path, m.colMap, m.dv.map(_._1),
-          TxLogBatch.dvBroadcastFor(spark, path, m)),
-      options = parameters)(spark)
+    TxLogBatch.relation(spark, path, m, parameters)
   }
 
   /** `df.write.format("graft-txlog").mode(...)` — batch writes map to

@@ -119,8 +119,8 @@ object TxLog {
     * reads through the filtered view, and entries whose target file
     * left the manifest prune out of the carried state, so the list is
     * self-maintaining and bounded by un-materialized deletes). */
-  private def dvLiveFor(dv: Seq[(String, Map[String, Long])],
-                        liveFiles: Set[String]): Seq[(String, Map[String, Long])] =
+  private[graft] def dvLiveFor(dv: Seq[(String, Map[String, Long])],
+                               liveFiles: Set[String]): Seq[(String, Map[String, Long])] =
     dv.map { case (f, entries) =>
       f -> entries.view.filterKeys(liveFiles).toMap
     }.filter(_._2.nonEmpty)
@@ -1125,7 +1125,7 @@ object TxLog {
     uri => {
       val i = uri.lastIndexOf("/data/")
       // no '/data/' ⇒ the input already IS the data-root-relative
-      // suffix (the _dv_key column readFiles computes)
+      // suffix (the _dv_key column scanOf computes)
       val suffix = if (i >= 0) uri.substring(i + "/data/".length) else uri
       bySuffix.get(suffix)
         .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
@@ -1182,7 +1182,7 @@ object TxLog {
     val (newStats, newRows, newNulls) = collectStats(spark, path,
       physicalize(StructType.fromDDL(schemaDdl), base.colMap),
       base.statsCols, newFiles,
-      recoverPartitions = base.partitionSpec.isEmpty)
+      if (base.partitionSpec.isEmpty) physPartCols(base) else Nil)
     var attempt = base
     var retries = 0
     while (true) {
@@ -1620,11 +1620,12 @@ object TxLog {
     * counts are ALWAYS measured (Delta's numRecords in spirit) — they
     * power [[fastCount]]'s metadata-only COUNT(*) — and the counting
     * projection is empty, so a stats-less table pays a column-pruned
-    * pass, not a data read. */
+    * pass, not a data read. `schema` is the PHYSICAL schema and
+    * `partitionCols` the partition columns its directories spell (none
+    * for a hidden layout, whose dirs hold derived values). */
   private def collectStats(spark: SparkSession, path: String,
                            schema: StructType, statsCols: Seq[String],
-                           files: Seq[String],
-                           recoverPartitions: Boolean = true)
+                           files: Seq[String], partitionCols: Seq[String])
       : (Map[String, Map[String, (String, String)]], Map[String, Long],
          Map[String, Map[String, Long]]) = {
     if (files.isEmpty) return (Map.empty, Map.empty, Map.empty)
@@ -1651,19 +1652,15 @@ object TxLog {
         }
     }
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-    val base = dataDir(path).toString
     val aggs = statsCols.flatMap(c => Seq(
       statsEncode(statsColType(schema, c), min(statsColExpr(c))).as(s"_min_$c"),
       statsEncode(statsColType(schema, c), max(statsColExpr(c))).as(s"_max_$c"),
       count(statsColExpr(c)).as(s"_nn_$c"))) :+
       count(lit(1)).as("_rows")
-    // hidden-partitioned tables skip basePath: the dirs spell DERIVED
-    // values that are not schema columns (the raw data is complete in
-    // the files), and partition recovery would trip over them
-    val reader0 = spark.read.schema(schema)
-    val reader = if (recoverPartitions) reader0.option("basePath", base) else reader0
-    val rows = reader
-      .parquet(files.map(f => s"$base/$f"): _*)
+    // the staged files scan through the snapshot path as a manifest of
+    // their own (no version yet, nothing committed)
+    val staged = Manifest(-1L, partitionCols, schema.toDDL, Nil)
+    val rows = scanOf(spark, path, staged, files)
       .groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -1677,7 +1674,7 @@ object TxLog {
       val uri = r.getString(0)
       // LAST '/data/': a table rooted under a path that itself
       // contains '/data/' must not key its stats off the outer
-      // segment (same convention as relEntry/readFiles)
+      // segment (same convention as relEntry/scanOf)
       val suffix = uri.substring(uri.lastIndexOf("/data/") + "/data/".length)
       val rel =
         if (entrySet.contains(suffix)) suffix
@@ -1749,7 +1746,7 @@ object TxLog {
     val files = stageIn(df, path, layout, transforms)
     val (stats, rowCounts, nullCounts) =
       collectStats(df.sparkSession, path, df.schema, statsCols, files,
-        recoverPartitions = transforms.isEmpty)
+        if (transforms.isEmpty) layout else Nil)
     // a dead table recreated at this path must not serve the old
     // incarnation's cached snapshots
     cacheInvalidate(df.sparkSession, path)
@@ -1882,7 +1879,7 @@ object TxLog {
       s"TxLog.convert: partition column '$c' did not recover from the layout"))
     validateStatsCols(schema, statsCols, "TxLog.convert")
     val (stats, rowCounts, nullCounts) =
-      collectStats(spark, dir, schema, statsCols, files)
+      collectStats(spark, dir, schema, statsCols, files, partitionCols)
     cacheInvalidate(spark, dir)
     val m = Manifest(1L, partitionCols, schema.toDDL, files,
       statsCols = statsCols, fileStats = stats, fileRows = rowCounts,
@@ -1991,7 +1988,7 @@ object TxLog {
     val files = stageIn(df1, path, layout, transforms)
     val (stats, rowCounts, nullCounts) =
       collectStats(spark, path, df1.schema, resolvedStats, files,
-        recoverPartitions = transforms.isEmpty)
+        if (transforms.isEmpty) layout else Nil)
     // write-time CDC for the truncate+insert shape (keepPolicies —
     // schema identical by construction): the replaced snapshot's rows
     // as deletes, the batch as inserts. A keepPolicies=false
@@ -2128,14 +2125,15 @@ object TxLog {
     -1L // unreachable
   }
 
-  /** Read a version (default: newest). Plans from the manifest's
-    * explicit file list with `basePath` set, so the partition column
-    * is recovered and partition/column pruning behave exactly as on a
-    * directly-written parquet table. The result carries the version's
-    * DECLARED schema: parquet reads append partition columns LAST and
-    * infer their type from the directory names (a long partition
-    * column would come back int) — the final projection restores the
-    * manifest's column order and types, so round trips are
+  /** Read a version (default: newest) through the format door's own
+    * scan ([[graft.sources.TxLogBatch.scan]]): the manifest's file list
+    * mounted as a `HadoopFsRelation` over
+    * [[graft.sources.TxLogFileIndex]] — partition values recovered from
+    * the manifest's directories, renames and deletion vectors applied
+    * by the table's parquet format, partition pruning and min/max data
+    * skipping at planning. The result carries the version's DECLARED
+    * column order and types (the mount arranges partition columns
+    * last; the scan projects them back), so round trips are
     * schema-exact. */
   def read(spark: SparkSession, path: String,
            version: Option[Long] = None): DataFrame = {
@@ -2152,7 +2150,8 @@ object TxLog {
     * sampling, and external DV computation. Positions of a COMMITTED
     * file are stable (DV deletes filter rows without renumbering the
     * survivors); a rewrite renumbers — this identifies (file, row),
-    * it is not a durable row id. */
+    * it is not a durable row id. Both columns come from the same scan
+    * [[read]] plans (`input_file_name` and `_metadata.row_index`). */
   def readWithPosition(spark: SparkSession, path: String,
                        version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -2165,104 +2164,22 @@ object TxLog {
       .drop("_dv_idx")
   }
 
-  /** Plan a read over an explicit file list under this table's data
-    * dir, returning the DECLARED schema (shared by [[read]] and
-    * [[appendsSince]]). */
-  /** `schema` is the LOGICAL schema to return; `colMap` maps renamed
-    * logical columns to the physical names the files spell — the scan
-    * reads physical, the final projection aliases back to logical, so
-    * a rename is invisible to every caller downstream. `dv` is the
-    * version's deletion-vector state: rows listed in a DV anti-join
-    * away before the final projection, so EVERY consumer of a
-    * DV-bearing snapshot (reads, merges, probes, CDF, compaction)
-    * sees the post-delete view through this one seam. */
-  private def readFiles(spark: SparkSession, path: String,
-                        schema: StructType, files: Seq[String],
-                        colMap: Seq[(String, String)] = Nil,
-                        dv: Seq[(String, Map[String, Long])] = Nil,
-                        keepDvKey: Boolean = false,
-                        recoverPartitions: Boolean = true): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-    else {
-      val physical = physicalize(schema, colMap)
-      val base = dataDir(path).toString
-      // DVs relevant to THIS file subset only; a DV-free read stays
-      // the plain scan (no metadata columns, no join)
-      val fileSet = files.toSet
-      val dvRelevant = dv.filter(_._2.keys.exists(fileSet))
-      val needKey = dvRelevant.nonEmpty || keepDvKey
-      // files group by their data ROOT: the table's own data dir for
-      // relative entries, the SOURCE table's data dir for a shallow
-      // clone's absolute references. Each root reads with its own
-      // basePath (so partition values still parse from the directory
-      // names they actually sit under) and the groups union — a
-      // plain-relative table stays a single scan.
-      val groups = files.groupBy { f =>
-        if (!isAbsEntry(f)) base
-        else {
-          val i = f.lastIndexOf("/data/")
-          if (i >= 0) f.substring(0, i + "/data".length)
-          else f.split('/').dropRight(1).mkString("/")
-        }
-      }
-      // the DECLARED schema rides into the reader: partition values
-      // parse from the raw directory string directly to their declared
-      // type (a string partition keeps "01" as "01" — inference alone
-      // would read INT 1 and a cast-back would corrupt it to "1")
-      val scanned = groups.toSeq.sortBy(_._1).map { case (root, fs) =>
-        // hidden-partitioned tables skip basePath: the dirs spell
-        // DERIVED transform values (not schema columns) and the raw
-        // data is complete in the files — nothing to recover
-        val reader0 = spark.read.schema(physical)
-        val reader =
-          if (recoverPartitions) reader0.option("basePath", root) else reader0
-        val scan = reader
-          .parquet(fs.map(f => if (isAbsEntry(f)) f else s"$root/$f"): _*)
-        if (!needKey) scan
-        else scan
-          // the same file key the DV writer computed: data-root-relative
-          // suffix (identical for relative entries and clone refs) —
-          // resolved per scan group, where _metadata still binds
-          .withColumn("_dv_key", org.apache.spark.sql.functions.expr(
-            "substring_index(input_file_name(), '/data/', -1)"))
-          .withColumn("_dv_idx",
-            org.apache.spark.sql.functions.col("_metadata.row_index"))
-      }.reduce(_ unionByName _)
-      val filtered =
-        if (dvRelevant.isEmpty) scanned
-        else {
-          val dvDf = spark.read
-            .parquet(dvRelevant.map { case (f, _) => dvPath(path, f) }: _*)
-            .select(org.apache.spark.sql.functions.col("f").as("_dv_key"),
-              org.apache.spark.sql.functions.col("row_index").as("_dv_idx"))
-          // DV rows are delete-sized: AQE broadcasts the anti-join side
-          scanned.join(dvDf, Seq("_dv_key", "_dv_idx"), "left_anti")
-        }
-      val projection = schema.fields.map { f =>
-        // backtick-quoted so dotted/spaced column names never
-        // mis-parse (same contract as Profile); the projection
-        // restores the declared column ORDER (parquet reads append
-        // partition columns last) AND the LOGICAL names (renamed
-        // columns read from their physical name)
-        val phys = colMap.find(_._1 == f.name).map(_._2).getOrElse(f.name)
-        org.apache.spark.sql.functions
-          .col("`" + phys.replace("`", "``") + "`").as(f.name)
-      }
-      filtered.select((projection ++ (if (keepDvKey)
-        Seq(org.apache.spark.sql.functions.col("_dv_key"),
-          org.apache.spark.sql.functions.col("_dv_idx"))
-        else Nil)).toIndexedSeq: _*)
-    }
-
-  /** The live rows of `files` in snapshot `m` — [[readFiles]] with the
-    * manifest's schema, renames, deletion vectors and layout. */
+  /** The live rows of `files` in snapshot `m` — the one snapshot scan
+    * ([[graft.sources.TxLogBatch.scan]]) every read and verb shares:
+    * the manifest's schema, renames, deletion vectors and layout, with
+    * `_dv_key`/`_dv_idx` appended under `keepDvKey`. */
   private def scanOf(spark: SparkSession, path: String, m: Manifest,
                      files: Iterable[String],
                      keepDvKey: Boolean = false): DataFrame =
-    readFiles(spark, path, StructType.fromDDL(m.schemaDdl), files.toSeq,
-      m.colMap, m.dv, keepDvKey, recoverPartitions = m.partitionSpec.isEmpty)
+    graft.sources.TxLogBatch.scan(spark, path, m, files.toSeq, keepDvKey)
+
+  /** The (file key, row index) pairs stored in DV sidecars `dvFiles`,
+    * read with the schema the engine writes them with. */
+  private[graft] def dvRows(spark: SparkSession, path: String,
+                            dvFiles: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(dvFiles.map(dvPath(path, _)): _*)
+
+  private val DvSchema = StructType.fromDDL("f STRING, row_index LONG")
 
   /** Stage `df` (LOGICAL columns) as new data files in snapshot `m`'s
     * layout — physical names, partition columns and transforms. */
@@ -3489,7 +3406,7 @@ object TxLog {
               spark.sessionState.conf.sessionLocalTimeZone)
           } else existingFiles
         if (candidates.nonEmpty) {
-          val collide = readFiles(spark, path, schema, candidates, m.colMap, m.dv, recoverPartitions = m.partitionSpec.isEmpty)
+          val collide = scanOf(spark, path, m, candidates)
             .select(cols.map(col): _*)
             .join(df.select(cols.map(col): _*).distinct(), cols, "left_semi")
             .limit(1).collect()
@@ -4889,10 +4806,10 @@ object TxLog {
           if (scanFiles.isEmpty) None
           else if (caller.wholeRow) Some(acted(scanFiles, keepDvKey = true))
           else {
-            acted(scanFiles, keepDvKey = true)
+            val kept = acted(scanFiles, keepDvKey = true)
               .filter(col("_act") =!= -1 || col("src").isNotNull)
-              .write.parquet(tmp.toString)
-            Some(spark.read.parquet(tmp.toString))
+            kept.write.parquet(tmp.toString)
+            Some(spark.read.schema(kept.schema).parquet(tmp.toString))
           }
         val actioned = joined.map(_.filter(col("_act") =!= -1))
         val (inserts, idClaims) = insertsAgainst(joined.map(
@@ -4995,7 +4912,7 @@ object TxLog {
     val at = dvPath(path, name)
     rows.select(col("_dv_key").as("f"), col("_dv_idx").cast("long").as("row_index"))
       .write.parquet(at)
-    val perFile = spark.read.parquet(at).groupBy("f").agg(count(lit(1)))
+    val perFile = dvRows(spark, path, Seq(name)).groupBy("f").agg(count(lit(1)))
       .collect()
     if (perFile.isEmpty) {
       fsFor(spark, path).delete(new Path(at), true)
@@ -5188,7 +5105,7 @@ object TxLog {
       // under a non-deterministic condition), scanning only the
       // DV-targeted files
       val cdc = captureCdc(spark, path, m, {
-        val sidecar = spark.read.parquet(dvPath(path, dvName))
+        val sidecar = dvRows(spark, path, Seq(dvName))
         val rows = scanOf(spark, path, m, dvTargets, keepDvKey = true)
         deleted(rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
           rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi"))
@@ -5299,7 +5216,7 @@ object TxLog {
 
   /** UPDATE ... SET ... WHERE — a FILE-GRANULAR rewrite (Delta's
     * UPDATE): discovery prunes to the files that actually admit a
-    * matching row (one snapshot scan through the shared readFiles
+    * matching row (one snapshot scan through the shared scanOf
     * seam, so DVs and renames apply), ONLY those files rewrite —
     * unmatched rows carry verbatim, matched rows take the SET
     * expressions — and the commit removes exactly the hit files.
@@ -5370,9 +5287,9 @@ object TxLog {
         s"_tmp_update_${java.util.UUID.randomUUID().toString.take(12)}")
       val fs = fsFor(spark, path)
       try {
-        scanOf(spark, path, m, m.files, keepDvKey = true)
-          .filter(hit).write.parquet(tmp.toString)
-        val matched = spark.read.parquet(tmp.toString)
+        val hitRows = scanOf(spark, path, m, m.files, keepDvKey = true).filter(hit)
+        hitRows.write.parquet(tmp.toString)
+        val matched = spark.read.schema(hitRows.schema).parquet(tmp.toString)
         if (matched.isEmpty) return m.version
         val images = assigned(
           matched.select(schema.fieldNames.map(col).toIndexedSeq: _*),
@@ -5646,7 +5563,7 @@ object TxLog {
     // commit's removed files): one scan per (schema era, DV state)
     // over the union of the lane's files; each row finds its commit
     // stamps through its file's data-root-relative suffix (the
-    // _dv_key column readFiles computes — the same identity the
+    // _dv_key column scanOf computes — the same identity the
     // manifests use). A restore can re-add a file another commit
     // already added inside the window: the scan list dedups, the
     // stamps keep one row per (version, file), and the stamp join
@@ -5659,7 +5576,6 @@ object TxLog {
         .groupBy(s => (eraKey(eraV(s.v)), dvOf(s)))
         .values.toSeq.sortBy(_.head.v).map { group =>
       val mv = manifest(spark, path, eraV(group.head.v))
-      val vSchema = StructType.fromDDL(mv.schemaDdl)
       // the scan's _dv_key comes from input_file_name (URI-encoded);
       // manifest entries are raw — stamp BOTH spellings so a partition
       // value needing encoding can never silently drop its rows
@@ -5674,10 +5590,8 @@ object TxLog {
       // appended files carry no DV at their birth commit (dv = Nil);
       // a CLONE's (or a restore endpoint's) rode in on its Src so the
       // lane's live rows scan through that side's DV state
-      val df = readFiles(spark, path, vSchema,
-        group.flatMap(lane).distinct, mv.colMap, dvOf(group.head),
-        keepDvKey = true,
-        recoverPartitions = mv.partitionSpec.isEmpty)
+      val df = scanOf(spark, path, mv.copy(dv = dvOf(group.head)),
+        group.flatMap(lane).distinct, keepDvKey = true)
       // LEFT join + in-plan guard: a scan key neither stamp spelling
       // matched would otherwise DROP its rows silently — fail loud
       // instead (costs nothing: a codegen'd null check, no extra pass)
@@ -5722,7 +5636,6 @@ object TxLog {
             graft.sources.TxLogBatch.dvBroadcastMaxRows(spark)) broadcast
         else identity
       val mv = manifest(spark, path, s.v)
-      val vSchema = StructType.fromDDL(mv.schemaDdl)
       val entryKeys = fl.entries.flatMap { f =>
         val raw = relEntry(f)
         val enc = new java.net.URI(null, null, "/" + raw, null)
@@ -5734,17 +5647,15 @@ object TxLog {
         if (dv.isEmpty)
           spark.emptyDataFrame
             .select(lit("").as("_dv_key"), lit(0L).as("_dv_idx")).limit(0)
-        else spark.read
-          .parquet(dv.map { case (f, _) => dvPath(path, f) }: _*)
+        else dvRows(spark, path, dv.map(_._1))
           .select(col("f").as("_dv_key"), col("row_index").as("_dv_idx"))
           // a DV parquet can cover entries outside the drifted set —
           // restrict before the position-set difference
           .join(entriesDf, Seq("_dv_key"), "left_semi")
       val pPos = posOf(fl.prevDv)
       val tPos = posOf(fl.tgtDv)
-      val scan = readFiles(spark, path, vSchema, fl.entries, mv.colMap,
-        Nil, keepDvKey = true,
-        recoverPartitions = mv.partitionSpec.isEmpty)
+      val scan = scanOf(spark, path, mv.copy(dv = Nil), fl.entries,
+        keepDvKey = true)
       def emit(pos: DataFrame, kind: String): DataFrame =
         scan.join(positionHint(pos), Seq("_dv_key", "_dv_idx"), "left_semi")
           .select(alignToTarget(scan, { n =>
@@ -6068,7 +5979,7 @@ object TxLog {
     // inserts, the written sidecar's positions joined back as deletes
     val cdc = captureCdc(spark, path, m, {
       val dels = addDv.headOption.map { case (dvName, _) =>
-        val sidecar = spark.read.parquet(dvPath(path, dvName))
+        val sidecar = dvRows(spark, path, Seq(dvName))
         val rows = scanOf(spark, path, m, m.files, keepDvKey = true)
         rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
             rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")

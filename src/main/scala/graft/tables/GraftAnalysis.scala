@@ -196,7 +196,8 @@ case class GraftAnalysis(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** Attach the same statistics to PATH-door mounts: a bare
     * `LogicalRelation` whose relation is a TxLog mount (the format
-    * door's HadoopFsRelation over [[graft.sources.TxLogFileIndex]], or
+    * door's and [[TxLog.read]]'s HadoopFsRelation over
+    * [[graft.sources.TxLogFileIndex]], or
     * the DV-over-budget [[graft.sources.TxLogJoinRelation]]) gets the
     * synthetic CatalogTable the catalog door already carries. Fires
     * once per relation (the catalogTable-empty guard), costs one
@@ -206,7 +207,9 @@ case class GraftAnalysis(spark: SparkSession) extends Rule[LogicalPlan] {
     val attached = lr.relation match {
       case fsRel: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
         fsRel.location match {
-          case idx: graft.sources.TxLogFileIndex =>
+          // a whole snapshot only: a verb's file-subset scan needs no
+          // CBO statistics (and table-wide NDVs would not describe it)
+          case idx: graft.sources.TxLogFileIndex if idx.full =>
             statsCatalogTable(idx.tablePath, idx.m.version, idx.m,
               new org.apache.hadoop.fs.Path(idx.tablePath).getName,
               lr.relation.schema, BigInt(fsRel.sizeInBytes))

@@ -44,8 +44,9 @@ class GwasIngestSpec extends SparkSpec {
     val out = "/tmp/graft_gwas_partitioned"
     val b37 = Seq(("1:1_A_T", 1, 1), ("2:2_G_C", 2, 2), ("3:3_A_G", 3, 3))
       .toDF("kgp_id", "chr", "pos")
-    val gwas = Seq(("1:1_A_T", 1, 1.5), ("2:2_G_C", 1, 0.7), ("3:3_A_G", 1, 2.2))
-      .toDF("kgp_id", "study_id", "stat")
+    val gwas = Seq(("1:1_A_T", 1, 1.5, 0.9), ("2:2_G_C", 1, 0.7, 0.9),
+        ("3:3_A_G", 1, 2.2, 0.9))
+      .toDF("kgp_id", "study_id", "stat", "impute_score")
     GwasOps.writePartitioned(gwas, b37, out)
     val scan = spark.read.parquet(out).filter(col("chr") === 2)
     val plan = scan.queryExecution.executedPlan.toString
@@ -54,5 +55,20 @@ class GwasIngestSpec extends SparkSpec {
     // the physical layout really is one directory per chromosome
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.sameElements(Array("chr=1", "chr=2", "chr=3")))
+    // the written layout registers as-is: the combined view keeps the
+    // fact's chr, and a region query prunes the fact to one partition
+    val study = Seq((1, "s1", "EUR", 100, 50, 50))
+      .toDF("id", "name", "ancestry", "n", "n_case", "n_control")
+    graft.gwas.GwasViews.register(spark, b37, b37, study, spark.read.parquet(out))
+    val region = spark.sql(graft.gwas.GwasViews.regionSql(2, 0, 10))
+    assert(region.select("kgp_id", "study_id", "stat", "chr", "pos", "name")
+      .as[(String, Int, Double, Int, Int, String)].collect().toSeq ==
+      Seq(("2:2_G_C", 1, 0.7, 2, 2, "s1")))
+    val factScans = region.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(factScans.size == 1 &&
+      factScans.head.partitionFilters.exists(_.references.exists(_.name == "chr")),
+      s"no chr partition filter on the fact:\n${region.queryExecution.sparkPlan}")
   }
 }

@@ -32,6 +32,10 @@ class TxLogBatchSpec extends SparkSpec {
       df.select("k", "part", "v").as[(Long, String, Double)].collect().toSet
     val viaFormat = spark.read.format("graft-txlog").option("path", path).load()
     assert(rows(viaFormat) == rows(TxLog.read(spark, path)))
+    // both doors share one scan: pin the rows themselves
+    val merged = Set((1L, "p1", 1.0), (2L, "p1", 99.0), (3L, "p2", 3.0), (4L, "p2", 4.0))
+    assert(rows(viaFormat) == merged)
+    assert(rows(TxLog.read(spark, path)) == merged)
     assert(viaFormat.columns.toSet == Set("k", "part", "v"))
     // the partition column's declared type survives (string stays string)
     assert(viaFormat.schema("part").dataType ==
@@ -235,6 +239,8 @@ class TxLogBatchSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "part", "v").as[(Long, String, Double)].collect().toSet
     assert(rows(viaFormat) == rows(TxLog.read(spark, path)))
+    val live = (1 to 40).filter(_ % 10 != 0).map(i => (i.toLong, s"p${i % 4}", i * 1.0)).toSet
+    assert(rows(viaFormat) == live)
     assert(viaFormat.count() == 36)
     assert(!rows(viaFormat).exists(_._1 % 10 == 0))
     // a DV MERGE (updates via DV + inserts) reads correctly too
@@ -242,6 +248,8 @@ class TxLogBatchSpec extends SparkSpec {
       .toDF("k", "part", "v"), Seq("k"), deletionVectors = true)
     val afterMerge = spark.read.format("graft-txlog").option("path", path).load()
     assert(rows(afterMerge) == rows(TxLog.read(spark, path)))
+    assert(rows(afterMerge) ==
+      live - ((1L, "p1", 1.0)) + ((1L, "p1", 111.0)) + ((41L, "p1", 41.0)))
     assert(rows(afterMerge).contains((1L, "p1", 111.0)) &&
       rows(afterMerge).contains((41L, "p1", 41.0)))
     // time travel BACK to the DV-delete version still applies ITS DVs
@@ -414,6 +422,10 @@ class TxLogBatchSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select("k", "part", "v").as[(Long, String, Double)].collect().toSet
       assert(rows(q) == rows(TxLog.read(spark, path)))
+      val live = (0 until 100).filter(_ % 10 != 0)
+        .map(i => (i.toLong, (i % 4).toString, i * 1.0)).toSet
+      assert(rows(q) == live)
+      assert(rows(TxLog.read(spark, path)) == live)
       assert(q.count() == 90)
       assert(q.filter(col("part") === "1" && col("v") > 5.0)
         .select("k").as[Long].collect().toSet ==
@@ -528,17 +540,33 @@ class TxLogBatchSpec extends SparkSpec {
   }
 
   test("distributed pruning composes with renames and deletion vectors") {
-    val path = freshPath("distdvren")
-    TxLog.create(spark.range(0, 100).select(col("id").as("k"),
-      (col("id") % 4).cast("string").as("part"), (col("id") * 1.0).as("score"))
-      .coalesce(2), path, Some("part"), statsCols = Seq("k"))
-    TxLog.renameColumn(spark, path, "score", "quality")
-    TxLog.renameColumn(spark, path, "part", "bucket")
-    TxLog.deleteWhere(spark, path, col("k") % 10 === 0L, deletionVectors = true)
+    def build(tag: String): String = {
+      val path = freshPath(tag)
+      TxLog.create(spark.range(0, 100).select(col("id").as("k"),
+        (col("id") % 4).cast("string").as("part"), (col("id") * 1.0).as("score"))
+        .coalesce(2), path, Some("part"), statsCols = Seq("k"))
+      TxLog.renameColumn(spark, path, "score", "quality")
+      TxLog.renameColumn(spark, path, "part", "bucket")
+      TxLog.deleteWhere(spark, path, col("k") % 10 === 0L, deletionVectors = true)
+      path
+    }
+    val path = build("distdvren")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "bucket", "quality").as[(Long, String, Double)]
         .collect().toSet
     val expect = rows(TxLog.read(spark, path))
+    assert(expect == (0 until 100).filter(_ % 10 != 0)
+      .map(i => (i.toLong, (i % 4).toString, i * 1.0)).toSet)
+    // the row-level verbs over the renamed, DV-bearing snapshot
+    def verbs(p: String): Set[(Long, String, Double)] = {
+      TxLog.mergeInto(p, Seq((1L, "1", 11.0), (200L, "0", 200.0))
+        .toDF("k", "bucket", "quality"), Seq("k"))
+      TxLog.deleteWhere(spark, p, col("k") === 2L)
+      TxLog.updateWhere(spark, p, Seq("quality" -> "quality + 1000"),
+        col("bucket") === "3" && col("k") < 20L)
+      rows(TxLog.read(spark, p))
+    }
+    val viaDriver = verbs(build("distverbs_driver"))
     val prevT = spark.conf.getOption("graft.txlog.distributedIndexThreshold")
     spark.conf.set("graft.txlog.distributedIndexThreshold", "1")
     try {
@@ -552,9 +580,49 @@ class TxLogBatchSpec extends SparkSpec {
       val p2Files = m.files.count(_.startsWith("part=2/"))
       assert(scansOf(sel).map(_.selectedPartitions.totalNumberOfFiles).sum
         == p2Files, "renamed partition pruning lost in distributed mode")
+      // the verbs plan the same rows when whole-snapshot scans list
+      // through the checkpoint job
+      val viaDist = verbs(build("distverbs_dist"))
+      assert(viaDist == viaDriver)
+      assert(viaDist == (expect - ((1L, "1", 1.0)) - ((2L, "2", 2.0)) +
+        ((1L, "1", 11.0)) + ((200L, "0", 200.0)))
+        .map { case (k, b, q) => if (b == "3" && k < 20L) (k, b, q + 1000) else (k, b, q) })
     } finally prevT match {
       case Some(v) => spark.conf.set("graft.txlog.distributedIndexThreshold", v)
       case None => spark.conf.unset("graft.txlog.distributedIndexThreshold")
     }
+  }
+
+  test("TxLog.read returns the declared column order on partitioned, renamed and hidden-partitioned tables") {
+    // a leading partition column: the mount arranges it last, the scan
+    // projects it back
+    val part = freshPath("order_part")
+    TxLog.create(Seq(("p1", 1L, 1.0), ("p2", 2L, 2.0)).toDF("part", "k", "v"),
+      part, Some("part"))
+    assert(TxLog.read(spark, part).columns.toSeq == Seq("part", "k", "v"))
+    assert(TxLog.read(spark, part).as[(String, Long, Double)].collect().toSet ==
+      Set(("p1", 1L, 1.0), ("p2", 2L, 2.0)))
+    // renames keep the position, spell the new name
+    TxLog.renameColumn(spark, part, "part", "grp")
+    TxLog.renameColumn(spark, part, "v", "w")
+    assert(TxLog.read(spark, part).columns.toSeq == Seq("grp", "k", "w"))
+    assert(TxLog.readWithPosition(spark, part).columns.toSeq ==
+      Seq("grp", "k", "w", "_file", "_pos"))
+    assert(TxLog.read(spark, part).as[(String, Long, Double)].collect().toSet ==
+      Set(("p1", 1L, 1.0), ("p2", 2L, 2.0)))
+    // a hidden layout surfaces the raw columns only, declared order
+    val hidden = freshPath("order_hidden")
+    TxLog.create(spark.range(0, 16).select(col("id").as("k"),
+      (col("id") * 2).as("v")).coalesce(1), hidden,
+      hiddenPartitions = Seq("bucket(4, k)"))
+    assert(TxLog.read(spark, hidden).columns.toSeq == Seq("k", "v"))
+    assert(TxLog.read(spark, hidden).as[(Long, Long)].collect().toSet ==
+      (0L until 16L).map(i => (i, i * 2)).toSet)
+    // two scans of one snapshot mount equal relations (plan reuse)
+    def relOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation
+      }.get
+    assert(relOf(TxLog.read(spark, part)) == relOf(TxLog.read(spark, part)))
   }
 }

@@ -101,4 +101,48 @@ class TxLogMergeJobsSpec extends SparkSpec {
       col("study_id") === 2 && col("chr") === 3, deletionVectors = true)))
     assert(TxLog.read(spark, p4).count() == 5 * 120)
   }
+
+  /** Jobs of the DV-bearing and many-file reads before `TxLog.read`
+    * mounted the format door's manifest index (this spec run on that
+    * tree, local session, Spark 4.1). */
+  private val PARENT_READ = Map(
+    "read construction (>32 files)" -> 1,
+    "read count (dv)" -> 4, "mergeInto (dv)" -> 15)
+
+  private def pinnedRead(what: String, n: Int, bound: Int): Unit = {
+    info(s"$what: $n jobs (before the shared scan path: ${PARENT_READ(what)})")
+    assert(n <= bound, s"$what now runs $n jobs, bound $bound")
+  }
+
+  test("snapshot reads start no listing or schema-inference job; DV-bearing verbs no more jobs than before") {
+    // one file per range partition: more than the 32 paths above which
+    // a path listing runs as a Spark job
+    val wide = java.nio.file.Files.createTempDirectory("graft_jobs_wide")
+      .toString + "/tbl"
+    TxLog.create(spark.range(0, 400, 1, 40).select(col("id").as("k")), wide)
+    val files = TxLog.manifest(spark, wide,
+      TxLog.currentVersion(spark, wide).get).files.size
+    assert(files > 32, s"expected more than 32 files, got $files")
+    var df: DataFrame = null
+    pinnedRead("read construction (>32 files)", jobsOf {
+      df = TxLog.read(spark, wide) }, bound = 0)
+    assert(df.count() == 400)
+
+    val p1 = table("dvread")
+    TxLog.deleteWhere(spark, p1, col("study_id") === 2 && col("chr") === 3,
+      deletionVectors = true)
+    var n = -1L
+    pinnedRead("read count (dv)", jobsOf { n = TxLog.read(spark, p1).count() },
+      bound = PARENT_READ("read count (dv)"))
+    assert(n == 5 * 120)
+
+    val p2 = table("dvmerge")
+    TxLog.deleteWhere(spark, p2, col("study_id") === 2 && col("chr") === 3,
+      deletionVectors = true)
+    pinnedRead("mergeInto (dv)", jobsOf(TxLog.mergeInto(p2, revision, keys)),
+      bound = PARENT_READ("mergeInto (dv)"))
+    // the revision re-inserts study 2 on chr 3 (30 keys) and updates or
+    // adds 30 keys in each other pair
+    assert(TxLog.read(spark, p2).count() == 5 * 130 + 30)
+  }
 }
