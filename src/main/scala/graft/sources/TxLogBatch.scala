@@ -38,8 +38,8 @@ import graft.storage.TxLog
   * `full` marks a whole version's snapshot: only it may plan through
   * the version's checkpoint (distributed listing, `sizeInBytes`),
   * which enumerates every file of the version. Equality is (table,
-  * version, scanned files), so two scans of one snapshot in one plan
-  * stay reuse-equal.
+  * version, scanned files, DV sidecars), so two scans of one snapshot
+  * in one plan stay reuse-equal.
   */
 class TxLogFileIndex private[graft] (spark: SparkSession,
                                      private[graft] val tablePath: String,
@@ -47,10 +47,6 @@ class TxLogFileIndex private[graft] (spark: SparkSession,
                                      private[graft] val full: Boolean)
     extends FileIndex {
   import TxLogFileIndex.{admitsNull, admitsTagged, dirPartOfEntry, partitionValuesOf}
-
-  /** The whole snapshot of `m`'s version. */
-  def this(spark: SparkSession, tablePath: String, m: TxLog.Manifest) =
-    this(spark, tablePath, m, full = true)
 
   private val declared = StructType.fromDDL(m.schemaDdl)
   private val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
@@ -387,12 +383,17 @@ class TxLogFileIndex private[graft] (spark: SparkSession,
       if (r.isNullAt(0)) 0L else r.getLong(0)
     } else statuses.map(_._2.getLen).sum
 
+  /** The deletion vectors the scan applies: one version and file list
+    * can mount with different DV states (the CDF lanes and flips), and
+    * stock `ParquetFileFormat.equals` cannot tell their formats apart. */
+  private def dvNames: Seq[String] = m.dv.map(_._1)
   override def equals(other: Any): Boolean = other match {
     case o: TxLogFileIndex =>
-      o.tablePath == tablePath && o.m.version == m.version && o.m.files == m.files
+      o.tablePath == tablePath && o.m.version == m.version &&
+        o.m.files == m.files && o.dvNames == dvNames
     case _ => false
   }
-  private lazy val hash = (tablePath, m.version, m.files).hashCode()
+  private lazy val hash = (tablePath, m.version, m.files, dvNames).hashCode()
   override def hashCode(): Int = hash
 }
 
@@ -679,20 +680,27 @@ object TxLogBatch {
     if (dvRowCount(m) > dvBroadcastMaxRows(spark)) new TxLogJoinRelation(spark, path, m)
     else fsRelation(spark, path, m, full = true, dvInFormat = true, options)
 
-  /** The live rows of `files` in snapshot `m`, in the DECLARED column
-    * order with LOGICAL names. Under the DV budget the format drops
-    * deleted rows per file; above it the scan anti-joins the DV
-    * sidecars on (file key, row index) — distributed, no driver
+  /** The live rows of the `scanned` files of snapshot `m`, in the
+    * DECLARED column order with LOGICAL names. Under the DV budget the
+    * format drops deleted rows per file; above it the scan anti-joins
+    * the DV sidecars on (file key, row index) — distributed, no driver
     * collect. `keepDvKey` appends `_dv_key` (the data-root-relative
     * file suffix DV sidecars store) and `_dv_idx` (the row's index
     * within its file). */
   private[graft] def scan(spark: SparkSession, path: String, m: TxLog.Manifest,
-                          files: Seq[String], keepDvKey: Boolean = false)
+                          scanned: Iterable[String], keepDvKey: Boolean = false)
       : DataFrame = {
+    val files = scanned.toSeq
     val full = files.size == m.files.size && files.toSet == m.files.toSet
+    // a subset keeps the snapshot's WHOLE entries of the sidecars it
+    // touches: the broadcast map loads whole sidecars, so the budget
+    // must price them whole, not just the subset's rows
     val sm =
       if (full) m
-      else m.copy(files = files, dv = TxLog.dvLiveFor(m.dv, files.toSet))
+      else {
+        val touched = TxLog.dvLiveFor(m.dv, files.toSet).map(_._1).toSet
+        m.copy(files = files, dv = m.dv.filter(d => touched(d._1)))
+      }
     val antiJoin = dvRowCount(sm) > dvBroadcastMaxRows(spark)
     val mounted = spark.baseRelationToDataFrame(
       fsRelation(spark, path, sm, full, dvInFormat = !antiJoin, Map.empty))
@@ -917,7 +925,10 @@ class TxLogJoinRelation(spark: SparkSession,
   import org.apache.spark.sql.{functions => F, sources, Column, SQLContext}
 
   override def sqlContext: SQLContext = spark.sqlContext
-  override val schema: StructType = StructType.fromDDL(m.schemaDdl)
+  /** All-nullable like the under-budget mount's, so one more delete
+    * never changes the schema a reader sees. */
+  override val schema: StructType =
+    StructType(StructType.fromDDL(m.schemaDdl).map(_.copy(nullable = true)))
   override def sizeInBytes: Long = spark.sessionState.conf.defaultSizeInBytes
 
   private def colOf(n: String): Column =

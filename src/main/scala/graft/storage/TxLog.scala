@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.TxLogBatch
+
 /** Manifest-based atomic table commits over plain parquet — the
   * transaction-log pattern (what a Delta/Iceberg commit does) with no
   * extra storage format: a TABLE is a directory whose live content is
@@ -1125,7 +1127,7 @@ object TxLog {
     uri => {
       val i = uri.lastIndexOf("/data/")
       // no '/data/' ⇒ the input already IS the data-root-relative
-      // suffix (the _dv_key column scanOf computes)
+      // suffix (the _dv_key column TxLogBatch.scan computes)
       val suffix = if (i >= 0) uri.substring(i + "/data/".length) else uri
       bySuffix.get(suffix)
         .orElse(bySuffix.get(java.net.URLDecoder.decode(suffix, "UTF-8")))
@@ -1660,7 +1662,7 @@ object TxLog {
     // the staged files scan through the snapshot path as a manifest of
     // their own (no version yet, nothing committed)
     val staged = Manifest(-1L, partitionCols, schema.toDDL, Nil)
-    val rows = scanOf(spark, path, staged, files)
+    val rows = TxLogBatch.scan(spark, path, staged, files)
       .groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -1674,7 +1676,7 @@ object TxLog {
       val uri = r.getString(0)
       // LAST '/data/': a table rooted under a path that itself
       // contains '/data/' must not key its stats off the outer
-      // segment (same convention as relEntry/scanOf)
+      // segment (same convention as relEntry/TxLogBatch.scan)
       val suffix = uri.substring(uri.lastIndexOf("/data/") + "/data/".length)
       val rel =
         if (entrySet.contains(suffix)) suffix
@@ -2126,7 +2128,7 @@ object TxLog {
   }
 
   /** Read a version (default: newest) through the format door's own
-    * scan ([[graft.sources.TxLogBatch.scan]]): the manifest's file list
+    * scan ([[TxLogBatch.scan]]): the manifest's file list
     * mounted as a `HadoopFsRelation` over
     * [[graft.sources.TxLogFileIndex]] — partition values recovered from
     * the manifest's directories, renames and deletion vectors applied
@@ -2140,7 +2142,7 @@ object TxLog {
     val v = version.orElse(currentVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
-    scanOf(spark, path, m, m.files)
+    TxLogBatch.scan(spark, path, m, m.files)
   }
 
   /** [[read]] plus the row-POSITION metadata columns: `_file` (the
@@ -2158,20 +2160,11 @@ object TxLog {
     val v = version.orElse(currentVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"TxLog: no table at $path"))
     val m = manifest(spark, path, v)
-    scanOf(spark, path, m, m.files, keepDvKey = true)
+    TxLogBatch.scan(spark, path, m, m.files, keepDvKey = true)
       .withColumn("_pos", col("_dv_idx").cast("long"))
       .withColumnRenamed("_dv_key", "_file")
       .drop("_dv_idx")
   }
-
-  /** The live rows of `files` in snapshot `m` — the one snapshot scan
-    * ([[graft.sources.TxLogBatch.scan]]) every read and verb shares:
-    * the manifest's schema, renames, deletion vectors and layout, with
-    * `_dv_key`/`_dv_idx` appended under `keepDvKey`. */
-  private def scanOf(spark: SparkSession, path: String, m: Manifest,
-                     files: Iterable[String],
-                     keepDvKey: Boolean = false): DataFrame =
-    graft.sources.TxLogBatch.scan(spark, path, m, files.toSeq, keepDvKey)
 
   /** The (file key, row index) pairs stored in DV sidecars `dvFiles`,
     * read with the schema the engine writes them with. */
@@ -2415,7 +2408,7 @@ object TxLog {
     val files = prunedFiles(spark, path, colName, lower, upper, Some(v))
     import org.apache.spark.sql.functions.lit
     // a variant-path column filters through its declared extraction
-    scanOf(spark, path, m, files)
+    TxLogBatch.scan(spark, path, m, files)
       .filter(statsColExpr(colName).between(lit(lower), lit(upper)))
   }
 
@@ -2453,7 +2446,7 @@ object TxLog {
         s"v$sinceVersion and v$to — history is not append-only over " +
         "this range; consume TxLog.changes instead")
     val fromSet = mFrom.files.toSet
-    scanOf(spark, path, mTo, mTo.files.filterNot(fromSet))
+    TxLogBatch.scan(spark, path, mTo, mTo.files.filterNot(fromSet))
   }
 
   /** Files ADDED by version `v` over its predecessor — the
@@ -2481,7 +2474,7 @@ object TxLog {
   private[graft] def readFileList(spark: SparkSession, path: String,
                                   version: Long, files: Seq[String]): DataFrame = {
     val m = manifest(spark, path, version)
-    scanOf(spark, path, m, files)
+    TxLogBatch.scan(spark, path, m, files)
   }
 
   /** Additive-only schema widening: every declared column keeps its
@@ -3406,7 +3399,7 @@ object TxLog {
               spark.sessionState.conf.sessionLocalTimeZone)
           } else existingFiles
         if (candidates.nonEmpty) {
-          val collide = scanOf(spark, path, m, candidates)
+          val collide = TxLogBatch.scan(spark, path, m, candidates)
             .select(cols.map(col): _*)
             .join(df.select(cols.map(col): _*).distinct(), cols, "left_semi")
             .limit(1).collect()
@@ -4308,7 +4301,7 @@ object TxLog {
     // count and the union executes as a single Spark job — compaction
     // cost scales with rewritten bytes, not with partition count
     val pieces = todo.toSeq.sortBy(_._1).map { case (_, files) =>
-      val part = scanOf(spark, path, m, files)
+      val part = TxLogBatch.scan(spark, path, m, files)
       val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
       val n = ((bytes + BigInt(targetBytesPerFile) - 1) / targetBytesPerFile)
         .max(1).toInt
@@ -4567,7 +4560,7 @@ object TxLog {
         .foldLeft(df)((d, f) =>
           d.withColumn(f.name, lit(null).cast(f.dataType)))
     def scan(files: Iterable[String], keepDvKey: Boolean = false): DataFrame =
-      padNewCols(scanOf(spark, path, m, files, keepDvKey))
+      padNewCols(TxLogBatch.scan(spark, path, m, files, keepDvKey))
     // a no-op merge under evolveSchema still WIDENS: schema presence
     // must not depend on whether this particular batch matched rows
     // (the CDC window that grew a column but touched nothing would
@@ -4894,7 +4887,7 @@ object TxLog {
     if (files.isEmpty) Set.empty
     else {
       val resolve = entryResolver(m.files)
-      keep(scanOf(spark, path, m, files, keepDvKey = true))
+      keep(TxLogBatch.scan(spark, path, m, files, keepDvKey = true))
         .select("_dv_key").distinct().collect()
         .map(r => resolve(r.getString(0))).toSet
     }
@@ -5023,7 +5016,7 @@ object TxLog {
     val cdc = captureCdc(spark, path, m, {
       val declared = StructType.fromDDL(m.schemaDdl)
       val replaced = m.files.filter(f => replaceDirs.contains(dirOf(f)))
-      scanOf(spark, path, m, replaced)
+      TxLogBatch.scan(spark, path, m, replaced)
         .select(declared.fieldNames.map(col).toIndexedSeq
           :+ lit("delete").as("_change_type"): _*)
         .unionByName(df.select(declared.fieldNames.map(col).toIndexedSeq
@@ -5088,7 +5081,7 @@ object TxLog {
       // already filtered, so a row can never be deleted twice; one
       // table-sized scan total
       val (dvName, counts) = writeDv(spark, path, m,
-          scanOf(spark, path, m, m.files, keepDvKey = true).filter(hit)) match {
+          TxLogBatch.scan(spark, path, m, m.files, keepDvKey = true).filter(hit)) match {
         case Some(dv) => dv
         case None => return m.version
       }
@@ -5106,7 +5099,7 @@ object TxLog {
       // DV-targeted files
       val cdc = captureCdc(spark, path, m, {
         val sidecar = dvRows(spark, path, Seq(dvName))
-        val rows = scanOf(spark, path, m, dvTargets, keepDvKey = true)
+        val rows = TxLogBatch.scan(spark, path, m, dvTargets, keepDvKey = true)
         deleted(rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
           rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi"))
       })
@@ -5119,14 +5112,14 @@ object TxLog {
       // the scan prunes to the condition's columns
       val hits = hitFiles(spark, path, m, m.files)(_.filter(hit))
       if (hits.isEmpty) return m.version
-      val newFiles = stageRows(path, m, scanOf(spark, path, m, hits).filter(not(hit)))
+      val newFiles = stageRows(path, m, TxLogBatch.scan(spark, path, m, hits).filter(not(hit)))
       // file-granular read declaration: the files this delete REWRITES
       // are load-bearing, a BLIND append serializes after the delete
       // (its rows were never in the delete's snapshot), a DV/removal on
       // an un-hit file cannot create matches — and files added by a
       // NON-blind commit conflict ([[predicateRebaseCheck]])
       val cdc = captureCdc(spark, path, m,
-        deleted(scanOf(spark, path, m, hits).filter(hit)))
+        deleted(TxLogBatch.scan(spark, path, m, hits).filter(hit)))
       commitRebase(spark, path, m, rewriteDirs = Set.empty,
         newFiles = newFiles, schemaDdl = m.schemaDdl, batchId = None,
         readSet = None, operation = "DELETE", removeFiles = hits,
@@ -5181,7 +5174,7 @@ object TxLog {
       enforceUniques(df, spark, path, declared,
         m.files.filterNot(hits.contains), m, "replaceWhere")
       if (hits.nonEmpty && m.uniques.nonEmpty) {
-        val survivorRows = scanOf(spark, path, m, hits).filter(not(hit))
+        val survivorRows = TxLogBatch.scan(spark, path, m, hits).filter(not(hit))
         m.uniques.foreach { case (name, cols) =>
           val collided = df.select(cols.map(col).toIndexedSeq: _*)
             .join(survivorRows.select(cols.map(col).toIndexedSeq: _*), cols)
@@ -5194,12 +5187,12 @@ object TxLog {
       }
       val survivors =
         if (hits.isEmpty) Nil
-        else stageRows(path, m, scanOf(spark, path, m, hits).filter(not(hit)))
+        else stageRows(path, m, TxLogBatch.scan(spark, path, m, hits).filter(not(hit)))
       val incoming = stageRows(path, m, df)
       // write-time CDC: the replaced region's rows as deletes, the
       // incoming batch as inserts
       val cdc = captureCdc(spark, path, m,
-        scanOf(spark, path, m, hits).filter(hit)
+        TxLogBatch.scan(spark, path, m, hits).filter(hit)
           .select(declared.fieldNames.map(col).toIndexedSeq
             :+ lit("delete").as("_change_type"): _*)
           .unionByName(df.select(declared.fieldNames.map(col).toIndexedSeq
@@ -5216,7 +5209,7 @@ object TxLog {
 
   /** UPDATE ... SET ... WHERE — a FILE-GRANULAR rewrite (Delta's
     * UPDATE): discovery prunes to the files that actually admit a
-    * matching row (one snapshot scan through the shared scanOf
+    * matching row (one snapshot scan through the shared TxLogBatch.scan
     * seam, so DVs and renames apply), ONLY those files rewrite —
     * unmatched rows carry verbatim, matched rows take the SET
     * expressions — and the commit removes exactly the hit files.
@@ -5287,7 +5280,7 @@ object TxLog {
         s"_tmp_update_${java.util.UUID.randomUUID().toString.take(12)}")
       val fs = fsFor(spark, path)
       try {
-        val hitRows = scanOf(spark, path, m, m.files, keepDvKey = true).filter(hit)
+        val hitRows = TxLogBatch.scan(spark, path, m, m.files, keepDvKey = true).filter(hit)
         hitRows.write.parquet(tmp.toString)
         val matched = spark.read.schema(hitRows.schema).parquet(tmp.toString)
         if (matched.isEmpty) return m.version
@@ -5314,7 +5307,7 @@ object TxLog {
       // exact hit-file discovery, identical to DELETE's
       val hits = hitFiles(spark, path, m, m.files)(_.filter(hit))
       if (hits.isEmpty) return m.version
-      val snap = scanOf(spark, path, m, hits)
+      val snap = TxLogBatch.scan(spark, path, m, hits)
       enforceConstraints(assigned(snap.filter(hit), everyRowMatched = true),
         m.constraints, "updateWhere")
       val newFiles = stageRows(path, m, assigned(snap, everyRowMatched = false))
@@ -5563,7 +5556,7 @@ object TxLog {
     // commit's removed files): one scan per (schema era, DV state)
     // over the union of the lane's files; each row finds its commit
     // stamps through its file's data-root-relative suffix (the
-    // _dv_key column scanOf computes — the same identity the
+    // _dv_key column TxLogBatch.scan computes — the same identity the
     // manifests use). A restore can re-add a file another commit
     // already added inside the window: the scan list dedups, the
     // stamps keep one row per (version, file), and the stamp join
@@ -5590,7 +5583,7 @@ object TxLog {
       // appended files carry no DV at their birth commit (dv = Nil);
       // a CLONE's (or a restore endpoint's) rode in on its Src so the
       // lane's live rows scan through that side's DV state
-      val df = scanOf(spark, path, mv.copy(dv = dvOf(group.head)),
+      val df = TxLogBatch.scan(spark, path, mv.copy(dv = dvOf(group.head)),
         group.flatMap(lane).distinct, keepDvKey = true)
       // LEFT join + in-plan guard: a scan key neither stamp spelling
       // matched would otherwise DROP its rows silently — fail loud
@@ -5633,7 +5626,7 @@ object TxLog {
         .map(_._2.valuesIterator.sum).sum
       val positionHint: DataFrame => DataFrame =
         if (flipDvRows <=
-            graft.sources.TxLogBatch.dvBroadcastMaxRows(spark)) broadcast
+            TxLogBatch.dvBroadcastMaxRows(spark)) broadcast
         else identity
       val mv = manifest(spark, path, s.v)
       val entryKeys = fl.entries.flatMap { f =>
@@ -5654,7 +5647,7 @@ object TxLog {
           .join(entriesDf, Seq("_dv_key"), "left_semi")
       val pPos = posOf(fl.prevDv)
       val tPos = posOf(fl.tgtDv)
-      val scan = scanOf(spark, path, mv.copy(dv = Nil), fl.entries,
+      val scan = TxLogBatch.scan(spark, path, mv.copy(dv = Nil), fl.entries,
         keepDvKey = true)
       def emit(pos: DataFrame, kind: String): DataFrame =
         scan.join(positionHint(pos), Seq("_dv_key", "_dv_idx"), "left_semi")
@@ -5951,7 +5944,7 @@ object TxLog {
       return sealNoopTxn(spark, path, m, txn, "APPLY CHANGES (KEYLESS)")
     // match removals to concrete LIVE occurrences, first-N per row in
     // (file, position) order
-    val withPos = scanOf(spark, path, m, m.files, keepDvKey = true)
+    val withPos = TxLogBatch.scan(spark, path, m, m.files, keepDvKey = true)
     val cond = cols.map(c => withPos(c) <=> col(s"_r_$c")).reduce(_ && _)
     val ow = Window.partitionBy(cols.map(c => col(s"_r_$c")): _*)
       .orderBy(col("_dv_key"), col("_dv_idx"))
@@ -5980,7 +5973,7 @@ object TxLog {
     val cdc = captureCdc(spark, path, m, {
       val dels = addDv.headOption.map { case (dvName, _) =>
         val sidecar = dvRows(spark, path, Seq(dvName))
-        val rows = scanOf(spark, path, m, m.files, keepDvKey = true)
+        val rows = TxLogBatch.scan(spark, path, m, m.files, keepDvKey = true)
         rows.join(sidecar, rows("_dv_key") === sidecar("f") &&
             rows("_dv_idx").cast("long") === sidecar("row_index"), "left_semi")
           .select(cols.map(col).toIndexedSeq
@@ -6881,7 +6874,7 @@ object TxLog {
           s"TxLog.buildBloomIndex: scan file '$uri' does not map back " +
             "to any manifest entry — partition value encoding mismatch"))
     }
-    val hashed = scanOf(spark, path, m, missing)
+    val hashed = TxLogBatch.scan(spark, path, m, missing)
       .select(input_file_name().as("_f"),
         xxhash64(col(colName).cast("string")).as("_h"))
     // filter sizing: the manifest's per-commit row counts cover most
@@ -6965,7 +6958,7 @@ object TxLog {
     val m = manifest(spark, path, v)
     val files = prunedFilesByKey(spark, path, colName, value, Some(v))
     import org.apache.spark.sql.functions.{col, lit}
-    scanOf(spark, path, m, files)
+    TxLogBatch.scan(spark, path, m, files)
       .filter(col(colName) === lit(value))
   }
 }

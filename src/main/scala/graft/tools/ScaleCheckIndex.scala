@@ -78,7 +78,7 @@ object ScaleCheckIndex {
     def plan(path: String, m: TxLog.Manifest, threshold: String): Long = {
       spark.conf.set("graft.txlog.distributedIndexThreshold", threshold)
       try {
-        val idx = new graft.sources.TxLogFileIndex(spark, path, m)
+        val idx = new graft.sources.TxLogFileIndex(spark, path, m, full = true)
         val (pf, df) = filtersFor(m.files.size)
         idx.listFiles(pf, df).map(_.files.size.toLong).sum
       } finally spark.conf.unset("graft.txlog.distributedIndexThreshold")

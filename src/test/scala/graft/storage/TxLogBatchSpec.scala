@@ -418,6 +418,10 @@ class TxLogBatchSpec extends SparkSpec {
       }
       assert(rels.exists(_.isInstanceOf[graft.sources.TxLogJoinRelation]),
         s"expected the anti-join fallback, got ${rels.map(_.getClass.getName)}")
+      // the declared NOT NULL key reads nullable on both sides of the
+      // budget: one more delete never changes the schema
+      assert(!org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)("k").nullable)
+      assert(q.schema.forall(_.nullable), q.schema.treeString)
       // row-exact vs the library read, filters and pruning still exact
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select("k", "part", "v").as[(Long, String, Double)].collect().toSet
@@ -446,6 +450,74 @@ class TxLogBatchSpec extends SparkSpec {
     }.exists(_.isInstanceOf[
       org.apache.spark.sql.execution.datasources.HadoopFsRelation]))
     assert(back.count() == 90)
+    assert(back.schema.forall(_.nullable), back.schema.treeString)
+    assert(back.schema.fields.sortBy(_.name).toSeq ==
+      TxLog.read(spark, path).schema.fields.sortBy(_.name).toSeq)
+  }
+
+  test("a file-subset scan prices its DV sidecars whole: over budget it anti-joins, never collects") {
+    val path = freshPath("dvsubset")
+    TxLog.create(spark.range(0, 100).select(col("id").as("k"),
+      (col("id") % 4).cast("string").as("part"), (col("id") * 1.0).as("v"))
+      .coalesce(2), path, Some("part"))
+    TxLog.deleteWhere(spark, path, col("k") % 10 === 0L, deletionVectors = true)
+    val m = TxLog.manifest(spark, path, TxLog.currentVersion(spark, path).get)
+    // one sidecar carries all 10 deleted rows across several files
+    assert(m.dv.size == 1 && graft.sources.TxLogBatch.dvRowCount(m) == 10L)
+    val one = m.dv.head._2.keys.toSeq.sorted.head
+    // one version and file list under two DV states never index equal
+    def index(mm: TxLog.Manifest) =
+      new graft.sources.TxLogFileIndex(spark, path, mm, full = true)
+    assert(index(m) == index(m) && index(m) != index(m.copy(dv = Nil)) &&
+      index(m.copy(dv = Nil)) != index(m))
+    val oneDeleted = m.dv.head._2(one)
+    assert(oneDeleted <= 5L, s"$one alone should fit the budget: $oneDeleted")
+    def antiJoins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join
+            if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+      }
+    def dvFormats(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          lr.relation
+      }.collect {
+        case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          r.fileFormat
+      }.collect {
+        case f: graft.sources.TxLogParquetFileFormat if f.dvFiles.nonEmpty => f
+      }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "part", "v").as[(Long, String, Double)].collect().toSet
+    val oneLive = rows(TxLog.readWithPosition(spark, path).filter(col("_file") === one))
+    assert(oneLive.size == m.fileRows(one) - oneDeleted)
+    assert(oneLive.forall(_._1 % 10 != 0))
+    // under the default budget the same subset filters in the format
+    val underBudget = graft.sources.TxLogBatch.scan(spark, path, m, Seq(one))
+    assert(antiJoins(underBudget).isEmpty && dvFormats(underBudget).nonEmpty)
+    assert(rows(underBudget) == oneLive)
+    val deletedKey = oneLive.map(_._1).min
+    val prev = spark.conf.getOption("graft.txlog.dvBroadcastMaxRows")
+    spark.conf.set("graft.txlog.dvBroadcastMaxRows", "5")
+    try {
+      // the one-file scan would load the whole sidecar (10 rows) into
+      // a broadcast map: it must anti-join instead
+      val sub = graft.sources.TxLogBatch.scan(spark, path, m, Seq(one))
+      assert(antiJoins(sub).nonEmpty, sub.queryExecution.optimizedPlan.toString)
+      assert(dvFormats(sub).isEmpty, "a subset scan collected an over-budget sidecar")
+      assert(rows(sub) == oneLive)
+      // verbs that hit one file of the over-budget snapshot stay exact
+      TxLog.deleteWhere(spark, path, col("k") === deletedKey)
+      TxLog.updateWhere(spark, path, Seq("v" -> "v + 1000"), col("k") === 1L)
+      TxLog.mergeInto(path, Seq((3L, "3", 33.0)).toDF("k", "part", "v"), Seq("k"))
+    } finally prev match {
+      case Some(v) => spark.conf.set("graft.txlog.dvBroadcastMaxRows", v)
+      case None => spark.conf.unset("graft.txlog.dvBroadcastMaxRows")
+    }
+    val expect = (0 until 100).filter(i => i % 10 != 0 && i != deletedKey)
+      .map(i => (i.toLong, (i % 4).toString,
+        if (i == 1) 1001.0 else if (i == 3) 33.0 else i * 1.0)).toSet
+    assert(rows(TxLog.read(spark, path)) == expect)
   }
 
   test("repeated mounts of the same DV snapshot reuse ONE broadcast (no per-mount leak)") {
